@@ -15,9 +15,22 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from grafeo_spark.algorithms.pregel import undirect, vertices_from_edges
+from grafeo_spark.algorithms.pregel import (
+    AQE_OFF_ROWS,
+    DISK_ONLY_ROWS,
+    GC_ROWS,
+    SMALL_ROWS,
+    loop_edges,
+    scoped_shuffle_width,
+    undirect,
+    vertices_from_edges,
+)
 
 DRIVER_ALGO_MAX_NODES = 100_000
+
+# betweenness: re-partition the visited set and collect old checkpoints
+# every this many BFS levels
+_CHECKPOINT_EVERY = 3
 
 
 def degree_centrality(edges: DataFrame, direction: str = "both") -> DataFrame:
@@ -101,41 +114,18 @@ def pagerank(
     # a plain projection over the materialized checkpoint — re-deriving it
     # per superstep-1 consumer is cheaper than a second checkpoint job
     state = state.withColumn("pr", F.lit(1.0 / n))
-    # Size the superstep shuffles to the MEASURED edge count (sum of
-    # out-degrees over the already-checkpointed state — no extra edge
-    # scan): at sf50 (375M directed edges) the contribution aggregation
-    # into the session's default partitions plus a MEMORY_AND_DISK edge
-    # cache starved execution memory outright
+    # The loop scope (loop_edges) is sized to the MEASURED edge count —
+    # the sum of out-degrees over the already-checkpointed state, no
+    # extra edge scan: at sf50 (375M directed edges) the contribution
+    # aggregation into the session's default partitions plus a memory-
+    # held edge cache starved execution memory outright
     # (SparkOutOfMemoryError UNABLE_TO_ACQUIRE_MEMORY, BENCH_SCALE r14).
-    # The conf raise is scoped to the superstep loop and restored in the
-    # finally — the r12 lesson: widen corpus-sized stages surgically,
-    # never the session.
+    # Past DISK_ONLY_ROWS the per-superstep checkpoints go DISK_ONLY too.
     from pyspark import StorageLevel
+    from pyspark.sql import Observation
 
-    spark = state.sparkSession
     ne = int(_init[1] or 0)
-    default_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    # width from the measured edge count in BOTH directions (pregel.py
-    # iter_width): the old formula only ever RAISED the session width, so
-    # a small graph paid `default` near-empty tasks per superstep job —
-    # the same cost the r14 betweenness clamp removed (its A/B: job
-    # overhead x supersteps dominates below ~100k rows)
-    from grafeo_spark.algorithms.pregel import iter_width
-
-    parts = iter_width(ne, spark)
-    big = ne > 150_000_000
-    ckpt_level = StorageLevel.DISK_ONLY if big else None
-    # materialize the edge list once, hash-partitioned by the join key:
-    # every iteration's contribution join then co-locates against the cached
-    # partitioning and only the (much smaller) vertex state moves. Past the
-    # documented single-node boundary (~150M edges) the cache and the
-    # per-superstep checkpoints go DISK_ONLY: a sequential re-read per
-    # superstep costs seconds; pinned storage blocks cost the job.
-    e = (
-        edges.select(F.col("src").alias("_es"), F.col("dst").alias("_ed"))
-        .repartition(parts, "_es")
-        .persist(StorageLevel.DISK_ONLY if big else StorageLevel.MEMORY_AND_DISK)
-    )
+    ckpt_level = StorageLevel.DISK_ONLY if ne > DISK_ONLY_ROWS else None
     it = 0
     # Dangling mass for superstep 1 came from the fused init aggregate
     # above (pr is uniform there); every later superstep's dang (and tol
@@ -143,20 +133,8 @@ def pagerank(
     # metric (r15): the old loop paid one extra aggregate job per
     # superstep (~0.4s × iterations at sf0.1; a full state pass at scale)
     # for a scalar the materializing job already sees every row of.
-    from pyspark.sql import Observation
-    # below the measured AQE_OFF_ROWS crossover, per-superstep AQE
-    # re-planning dominates the loop (r15 A/B at 750k edges: 17.3s on vs
-    # 11.8s off over 10 supersteps); at decade scale AQE stays on for
-    # skew handling — same rule as pregel.scoped_shuffle_width
-    from grafeo_spark.algorithms.pregel import AQE_OFF_ROWS
-
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    aqe_off = ne < AQE_OFF_ROWS and prev_aqe == "true"
-    if parts != int(default_parts):
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    if aqe_off:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    cached = edges.select(F.col("src").alias("_es"), F.col("dst").alias("_ed"))
+    with loop_edges(cached, "_es", ne) as (e, _):
         for it in range(1, max_iter + 1):
             # shuffle_hash hint on the STATE side (r16): without it,
             # Catalyst broadcast-exchanged the EDGE CACHE every superstep
@@ -208,14 +186,13 @@ def pagerank(
             state = state.localCheckpoint(eager=True, storageLevel=ckpt_level)
             vals = obs.get  # collected by the checkpoint job above
             dang = vals["dang"] or 0.0
-            if n > 2_000_000:
+            if n > GC_ROWS:
                 # big-state runs only: free the previous superstep's
-                # checkpoint blocks eagerly — see pregel.py: unreferenced
-                # checkpoints otherwise pile up in the block store until a
-                # chance GC (measured at sf25 / 46M vertices: supersteps
-                # churned 29-60s vs a flat ~17s with explicit collection).
-                # Gated on n so small-graph runs don't pay ~0.1s/superstep
-                # of driver GC for blocks that total a few MB.
+                # checkpoint blocks eagerly — see pregel.fixpoint:
+                # unreferenced checkpoints otherwise pile up in the block
+                # store until a chance GC. Gated on n so small-graph runs
+                # don't pay ~0.1s/superstep of driver GC for blocks that
+                # total a few MB.
                 import gc
 
                 gc.collect()
@@ -224,12 +201,6 @@ def pagerank(
                 state = state.drop("_prev")
                 if delta is not None and delta < tol:
                     break
-    finally:
-        if parts != int(default_parts):
-            spark.conf.set("spark.sql.shuffle.partitions", default_parts)
-        if aqe_off:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        e.unpersist()
     out = state.select("id", F.col("pr").alias("pagerank"))
     # diagnostic for tests/tuning: how many supersteps actually ran
     out.iterations_run = it  # type: ignore[attr-defined]
@@ -270,7 +241,6 @@ def betweenness_centrality(
     directed: bool = False,
     sample_sources: Optional[int] = None,
     seed: int = 42,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Brandes' betweenness (centrality.rs:580), distributed over sources.
 
@@ -296,8 +266,6 @@ def betweenness_centrality(
     Brandes-pivot estimator, and the knob that bounds total work at
     cluster scale. Default (None) is exact.
     """
-    import gc
-
     e = edges.select("src", "dst").distinct()
     if not directed:
         e = undirect(e).distinct()
@@ -316,23 +284,15 @@ def betweenness_centrality(
     # 25-node path = ~50 driver round-trips), so the whole iteration —
     # including the pre-partitioned edge side, which must share the width
     # or every level re-exchanges it — runs at a scoped-down partition
-    # count (the inverse of pagerank's scoped raise; restored below).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    small = nv <= 100_000
-    eff_parts = min(int(prev_parts), 4) if small else int(prev_parts)
-    # All work after the scoped conf.set — including the eager edge
-    # repartition and source sampling — sits inside the try so a failure
-    # anywhere cannot leak the clamped width into the session.
-    try:
-        if small:
-            spark.conf.set("spark.sql.shuffle.partitions", str(eff_parts))
-            # ~2·diameter tiny per-level jobs: AQE's per-exchange
-            # re-planning dominates here exactly as in the other
-            # iterative loops (pregel.AQE_OFF_ROWS rationale); at real
-            # sizes it stays on for skew handling
-            if prev_aqe == "true":
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # count with AQE off (~2·diameter tiny per-level jobs: AQE's
+    # per-exchange re-planning dominates them, the pregel.AQE_OFF_ROWS
+    # rationale). A bigger graph keeps the session's width and AQE; the
+    # scope then only guards the session against a concurrent loop.
+    small = nv <= SMALL_ROWS
+    eff_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    if small:
+        eff_parts = min(eff_parts, 4)
+    with scoped_shuffle_width(spark, eff_parts, rows=nv if small else AQE_OFF_ROWS):
         # hash-partition edges on the join key ONCE: every forward level and
         # every reverse level joins on id == src, so a pre-partitioned edge
         # side never re-exchanges (2·diameter exchanges saved; the frontier
@@ -351,19 +311,13 @@ def betweenness_centrality(
 
         # ---- forward multi-source BFS with shortest-path counts ------
         return _betweenness_core(
-            spark, e, verts, nv, sources, n_sources, eff_parts,
-            checkpoint_every, normalized, directed, empty,
+            e, verts, nv, sources, n_sources, eff_parts, normalized, directed,
+            empty,
         )
-    finally:
-        if small:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            if prev_aqe == "true":
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
 def _betweenness_core(
-    spark, e, verts, nv, sources, n_sources, eff_parts,
-    checkpoint_every, normalized, directed, empty,
+    e, verts, nv, sources, n_sources, eff_parts, normalized, directed, empty,
 ):
     import gc
 
@@ -379,7 +333,7 @@ def _betweenness_core(
     # The algorithm's memory envelope is the RETAINED level set: every
     # forward level's checkpoint stays pinned until the reverse pass has
     # consumed it. Past the same single-node boundary pagerank uses
-    # (~150M retained rows — centrality.py:105) new checkpoints switch to
+    # (DISK_ONLY_ROWS retained rows) new checkpoints switch to
     # DISK_ONLY: a sequential re-read per level costs seconds; pinned
     # memory blocks cost the job (the sf50 pagerank lesson, r14).
     ckpt_level = None
@@ -399,11 +353,11 @@ def _betweenness_core(
         if n_new == 0:
             break
         seen_rows += n_new
-        if seen_rows > 150_000_000:
+        if seen_rows > DISK_ONLY_ROWS:
             ckpt_level = StorageLevel.DISK_ONLY
         levels.append(nxt)
         visited = visited.unionByName(nxt.select("source", "id"))
-        if d % checkpoint_every == 0:
+        if d % _CHECKPOINT_EVERY == 0:
             # hash-partition the seen state on the anti-join key, sized to
             # the observed state (the reachable_pairs pattern) so per-task
             # state stays bounded however large the reachable set grows;
@@ -454,7 +408,7 @@ def _betweenness_core(
         # retained level set SHRINK through the reverse pass instead of
         # pinning forward-total + reverse-total blocks until the end.
         delta_lev = delta_lev.localCheckpoint(
-            eager=seen_rows > 150_000_000, storageLevel=ckpt_level
+            eager=seen_rows > DISK_ONLY_ROWS, storageLevel=ckpt_level
         )
         bc_parts.append(delta_lev.select("id", "delta"))
         delta_next = delta_lev
@@ -465,7 +419,7 @@ def _betweenness_core(
         # set SHRINKS through the reverse pass instead of peaking at
         # forward-total + reverse-total
         levels[lev + 1] = None
-        if lev % checkpoint_every == 0:
+        if lev % _CHECKPOINT_EVERY == 0:
             gc.collect()
 
     # deepest-level deltas are 0 (no successors) and the source itself

@@ -14,8 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grafeo_spark.algorithms.pregel import (
-    iter_width,
-    scoped_shuffle_width,
+    fixpoint,
+    loop_edges,
     undirect,
     vertices_from_edges,
 )
@@ -27,66 +27,40 @@ def label_propagation(edges: DataFrame, max_iter: int = 10) -> DataFrame:
     """(id, label) — synchronous LPA (community.rs:363).
 
     Per iteration: neighbor labels → per-(vertex,label) counts → pick the
-    most frequent (ties: smallest label) via one window. Stops early when
-    no label changed. Synchronous updates can oscillate on bipartite
-    structures — max_iter caps that (the reference caps iterations too).
+    most frequent (ties: smallest label) via one aggregate. Stops early
+    when no label changed. Synchronous updates can oscillate on bipartite
+    structures — max_iter caps that (the reference caps iterations too),
+    so a capped run returns its last labels rather than raising.
     """
-    # Materialize the undirected edge frame ONCE, hash-partitioned on the
-    # join key (guide §2.4): the old loop re-derived undirect+distinct —
-    # a scan plus an exchange — in every iteration; with the partitioning
-    # cached only the (much smaller) label state moves per iteration
-    # (the pregel-kernel edge-cache pattern, pregel.py:63). The loop runs
-    # at an edge-count-derived width, scoped and restored — the pregel
-    # kernel's sizing rule (~2M rows/task, floor 4, cap 2048).
-    spark = edges.sparkSession
-    _n_und = edges.count() * 2
-    eff_parts = iter_width(_n_und, spark)
-    und = (
-        undirect(edges.select("src", "dst"))
-        .distinct()
-        .repartition(eff_parts, "dst")
-        .persist()
-    )
-    try:
-      with scoped_shuffle_width(spark, eff_parts, rows=_n_und):
+    n_und = edges.count() * 2  # bounds the distinct undirected edges
+    und = undirect(edges.select("src", "dst")).distinct()
+
+    def step(labels: DataFrame, it: int) -> tuple[DataFrame, bool]:
+        nbr = (
+            e.join(labels, e["dst"] == labels["id"], "inner")
+            .select(e["src"].alias("_id"), F.col("label").alias("nlabel"))
+            .groupBy("_id", "nlabel")
+            .agg(F.count("*").alias("cnt"))
+        )
+        # argmax by (cnt desc, nlabel asc) as a plain aggregate: min
+        # over struct(-cnt, nlabel). Replaces the row_number window —
+        # same exchange on _id, but no per-partition sort and the
+        # partial (map-side) aggregation halves what it shuffles
+        # (guide §2.3 "aggregate before you shuffle").
+        best = (
+            nbr.groupBy("_id")
+            .agg(F.min(F.struct((-F.col("cnt")).alias("_nc"), F.col("nlabel"))).alias("_p"))
+            .select("_id", F.col("_p.nlabel").alias("new_label"))
+        )
+        new = F.coalesce(F.col("new_label"), F.col("label"))
+        nxt = labels.join(best, labels["id"] == best["_id"], "left").select(
+            "id", new.alias("label"), (new != F.col("label")).alias("_changed")
+        )
+        return nxt, False
+
+    with loop_edges(und, "dst", n_und) as (e, _):
         labels = vertices_from_edges(edges).withColumn("label", F.col("id"))
-        for it in range(max_iter):
-            nbr = (
-                und.join(labels, und["dst"] == labels["id"], "inner")
-                .select(und["src"].alias("_id"), F.col("label").alias("nlabel"))
-                .groupBy("_id", "nlabel")
-                .agg(F.count("*").alias("cnt"))
-            )
-            # argmax by (cnt desc, nlabel asc) as a plain aggregate: min
-            # over struct(-cnt, nlabel). Replaces the row_number window —
-            # same exchange on _id, but no per-partition sort and the
-            # partial (map-side) aggregation halves what it shuffles
-            # (guide §2.3 "aggregate before you shuffle").
-            best = (
-                nbr.groupBy("_id")
-                .agg(F.min(F.struct((-F.col("cnt")).alias("_nc"), F.col("nlabel"))).alias("_p"))
-                .select("_id", F.col("_p.nlabel").alias("new_label"))
-            )
-            nxt = (
-                labels.join(best, labels["id"] == best["_id"], "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
-                    (
-                        F.coalesce(F.col("new_label"), F.col("label")) != F.col("label")
-                    ).alias("_chg"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # full count fused with the lazy checkpoint: one job per
-            # iteration instead of eager-checkpoint + isEmpty (r15)
-            changed = nxt.filter(F.col("_chg")).count() > 0
-            labels = nxt.drop("_chg")
-            if not changed:
-                break
-        return labels
-    finally:
-        und.unpersist()
+        return fixpoint(labels, step, max_iter, n_und)[0]
 
 
 def modularity(edges: DataFrame, communities: DataFrame) -> float:

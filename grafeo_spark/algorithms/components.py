@@ -13,8 +13,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grafeo_spark.algorithms.pregel import (
+    JUMP_AFTER,
+    fixpoint,
     full_width,
-    pregel,
+    loop_edges,
     scoped_shuffle_width,
     undirect,
     vertices_from_edges,
@@ -56,7 +58,7 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
 
     Bounds (the iterative-family contract, same as BFS/WCC): each inner
     fixpoint runs with convergence early exit and POINTER JUMPING
-    (recursive doubling, r16 — pregel ``jump_col``): a label crosses
+    (recursive doubling, r16 — ``_min_label_fixpoint``): a label crosses
     distance 2^k after k supersteps, so chain/cycle shapes converge in
     O(log diameter) supersteps instead of O(diameter); the bound passed
     down stays |V|+1, so even without jumping a long cycle colors
@@ -258,82 +260,67 @@ def _min_label_fixpoint(
 
     ``edge_rows``: known upper bound on the edge count — skips the sizing
     count job (shrink loops already hold a bound; a stale larger bound
-    only errs wide)."""
-    from grafeo_spark.algorithms.pregel import (
-        JUMP_AFTER,
-        _ckpt_strip_stats,
-        iter_width,
-        scoped_shuffle_width,
-    )
+    only errs wide).
 
-    spark = edges.sparkSession
+    Raises ``ValueError`` if the labels have not converged after
+    ``max_iter`` supersteps."""
     ne = int(edge_rows) if edge_rows is not None else edges.count()
-    w = iter_width(ne, spark)
-    e = (
-        edges.select(F.col("src").alias("_es"), F.col("dst").alias("_ed"))
-        .repartition(w, "_es")
-        .persist()
-    )
-    try:
-        with scoped_shuffle_width(spark, w, rows=ne):
-            state = (
-                vertices.select("id", F.col("id").alias("color"))
-                .repartition(w, "id")
-                .localCheckpoint(eager=False)
+    cached = edges.select(F.col("src").alias("_es"), F.col("dst").alias("_ed"))
+
+    def step(state: DataFrame, it: int) -> tuple[DataFrame, bool]:
+        state = state.drop("_changed")
+        use_jump = jump and it > JUMP_AFTER
+        msgs = (
+            e.join(
+                state.hint("shuffle_hash"), F.col("_es") == F.col("id")
+            ).select(
+                F.col("_ed").alias("id"),
+                F.col("color"),
+                F.lit(True).alias("_m"),
             )
-            it = 0
-            while it < max_iter:
-                it += 1
-                use_jump = jump and it > JUMP_AFTER
-                msgs = (
-                    e.join(
-                        state.hint("shuffle_hash"), F.col("_es") == F.col("id")
-                    ).select(
-                        F.col("_ed").alias("id"),
-                        F.col("color"),
-                        F.lit(True).alias("_m"),
-                    )
-                )
-                if use_jump:
-                    ptr = state.filter(F.col("color") != F.col("id")).select(
-                        F.col("id").alias("_jid"), F.col("color").alias("_jp")
-                    )
-                    tgt = state.select(
-                        F.col("id").alias("_tid"), F.col("color").alias("_tc")
-                    )
-                    jm = ptr.join(tgt, F.col("_jp") == F.col("_tid")).select(
-                        F.col("_jid").alias("id"),
-                        F.col("_tc").alias("color"),
-                        F.lit(True).alias("_m"),
-                    )
-                    msgs = msgs.unionByName(jm)
-                agg = (
-                    state.withColumn("_m", F.lit(False))
-                    .unionByName(msgs)
-                    .groupBy("id")
-                    .agg(
-                        F.min("color").alias("color"),
-                        # exactly one state row per id → its color is the
-                        # previous superstep's value; no comparison join
-                        F.min(F.when(~F.col("_m"), F.col("color"))).alias("_oc"),
-                    )
-                )
-                nxt = agg.select(
-                    "id", "color", (F.col("color") < F.col("_oc")).alias("_changed")
-                )
-                # lazy checkpoint + count = one materializing job (r15
-                # fusion); jump supersteps re-wrap without origin stats
-                nxt = (
-                    _ckpt_strip_stats(nxt, False)
-                    if use_jump
-                    else nxt.localCheckpoint(eager=False)
-                )
-                if nxt.filter(F.col("_changed")).count() == 0:
-                    return nxt.drop("_changed")
-                state = nxt.drop("_changed")
-            return state
-    finally:
-        e.unpersist()
+        )
+        if use_jump:
+            ptr = state.filter(F.col("color") != F.col("id")).select(
+                F.col("id").alias("_jid"), F.col("color").alias("_jp")
+            )
+            tgt = state.select(
+                F.col("id").alias("_tid"), F.col("color").alias("_tc")
+            )
+            jm = ptr.join(tgt, F.col("_jp") == F.col("_tid")).select(
+                F.col("_jid").alias("id"),
+                F.col("_tc").alias("color"),
+                F.lit(True).alias("_m"),
+            )
+            msgs = msgs.unionByName(jm)
+        agg = (
+            state.withColumn("_m", F.lit(False))
+            .unionByName(msgs)
+            .groupBy("id")
+            .agg(
+                F.min("color").alias("color"),
+                # exactly one state row per id → its color is the
+                # previous superstep's value; no comparison join
+                F.min(F.when(~F.col("_m"), F.col("color"))).alias("_oc"),
+            )
+        )
+        nxt = agg.select(
+            "id", "color", (F.col("color") < F.col("_oc")).alias("_changed")
+        )
+        return nxt, use_jump
+
+    with loop_edges(cached, "_es", ne) as (e, w):
+        state = (
+            vertices.select("id", F.col("id").alias("color"))
+            .repartition(w, "id")
+            .localCheckpoint(eager=False)
+        )
+        out, converged = fixpoint(state, step, max_iter, ne)
+    if not converged:
+        raise ValueError(
+            f"min-label propagation did not converge within max_iter={max_iter} "
+            "supersteps; raise max_iter"
+        )
+    return out
 
 
 def topological_sort(edges: DataFrame, max_iter: int = 200) -> DataFrame:

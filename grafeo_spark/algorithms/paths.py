@@ -18,7 +18,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from grafeo_spark.algorithms.pregel import pregel, undirect, vertices_from_edges
+from grafeo_spark.algorithms.pregel import _pregel, undirect, vertices_from_edges
 
 DRIVER_ALGO_MAX_NODES = 100_000
 
@@ -83,7 +83,9 @@ def shortest_paths(
     """(id, distance) minimum distance from any source — Bellman-Ford
     relaxation (shortest_path.rs:702; equals Dijkstra's result for
     non-negative weights, shortest_path.rs:595). Unreached vertices are
-    omitted."""
+    omitted. Raises ``ValueError`` if the distances have not converged
+    after ``max_iter`` supersteps — one more than the most edges on any
+    shortest path, since the last superstep only confirms convergence."""
     cols = ["src", "dst"] + ([weight_col] if weight_col else [])
     e = edges.select(*cols)
     if not directed:
@@ -107,13 +109,14 @@ def shortest_paths(
             better.alias("_changed"),
         )
 
-    out = pregel(
+    out, converged = _pregel(
         v,
         e,
         send_to_dst=F.when(F.col("v_dist").isNotNull(), F.col("v_dist") + w),
         agg_msg=F.min("msg"),
         update=update,
         max_iter=max_iter,
+        send_to_src=None,
         # frontier-only relaxation (guide §2.3): a vertex whose dist did
         # not improve last superstep already delivered that dist to every
         # neighbor — only the changed frontier sends, so each superstep's
@@ -121,6 +124,12 @@ def shortest_paths(
         # reached vertex's (the standard delta Bellman-Ford)
         delta_only=True,
     )
+    if not converged:
+        raise ValueError(
+            f"shortest_paths did not converge within max_iter={max_iter} "
+            "supersteps (a path longer than max_iter - 1 edges, or a "
+            "negative cycle); raise max_iter"
+        )
     return out.filter(F.col("dist").isNotNull()).select("id", F.col("dist").alias("distance"))
 
 
@@ -145,8 +154,9 @@ def bellman_ford(
     max_iter: int = 50,
 ) -> DataFrame:
     """Alias with reference naming (shortest_path.rs:702); supports the
-    same relaxation loop (negative weights converge within max_iter=|V|-1
-    if no negative cycle — pass max_iter >= |V|-1 for that guarantee)."""
+    same relaxation loop (negative weights converge within max_iter=|V|
+    if no negative cycle — pass max_iter >= |V| for that guarantee; the
+    last superstep confirms convergence)."""
     return shortest_paths(
         edges, [source], weight_col=weight_col, directed=directed, max_iter=max_iter
     )

@@ -1,19 +1,29 @@
 """Pregel-style iterative kernel on DataFrames.
 
 The Spark-native replacement for the reference's in-memory algorithm
-plugins (crates/grafeo-adapters/src/plugins/algorithms/): a
-superstep loop of
+plugins (crates/grafeo-adapters/src/plugins/algorithms/): a superstep
+loop of
 
     messages = edges ⋈ vertex-state  →  groupBy(target).agg(msg)
     vertices = vertices ⟕ messages   →  update expressions
 
 i.e. GraphX ``aggregateMessages`` semantics expressed as DataFrame joins.
-Each superstep is two shuffles (message grouping + vertex join); lineage is
-truncated with ``localCheckpoint`` every few supersteps so a 20-iteration
-run doesn't build a 20-deep recursive plan. Convergence is signalled by a
-``_changed`` boolean state column (checked with ``isEmpty`` — one cheap
-action per superstep, the standard cost of iterate-until-fixpoint on
-Spark).
+The loop machinery around that join exists once, here:
+
+- ``loop_edges`` sizes the loop width from the measured edge rows
+  (``iter_width``), scopes it (``scoped_shuffle_width``), and caches the
+  edge side co-partitioned on the message-join key for the loop's
+  lifetime.
+- ``fixpoint`` drives the supersteps. A step function maps the previous
+  state to the next one, which carries a boolean ``_changed`` column, and
+  says whether its plan self-joins the state (pointer jumping). The
+  driver lazily checkpoints each new state (stripping inherited size
+  statistics on self-join supersteps) and fuses that checkpoint with the
+  count of changed rows: one job per superstep, which is also the
+  convergence test. It collects old checkpoints on big loops and reports
+  whether the loop converged; what exhaustion means is the caller's call.
+- ``pregel`` is the generic step on top of both: message join, one
+  aggregate per target, and a left-outer update.
 
 Column conventions inside ``send_*`` expressions:
 - vertex state columns of the *sending* side are prefixed ``v_``
@@ -23,12 +33,18 @@ Column conventions inside ``send_*`` expressions:
 
 from __future__ import annotations
 
+import gc
+from contextlib import contextmanager
 from typing import Callable, Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Loops over more than GC_ROWS measured rows collect Python garbage every
+# CHECKPOINT_EVERY supersteps (see fixpoint).
 CHECKPOINT_EVERY = 4
+GC_ROWS = 2_000_000
 
 # Target edge/state rows per task for iterative-loop shuffles — the
 # pagerank/betweenness sizing rule (centrality.py:104): width grows with
@@ -44,6 +60,10 @@ ROWS_PER_TASK = 2_000_000
 # ROWS_PER_TASK and beyond.
 MIN_ROWS_PER_TASK = 100_000
 
+# The documented single-node boundary (~150M rows, BENCH_SCALE r14): past
+# it a loop's cached and retained frames go DISK_ONLY.
+DISK_ONLY_ROWS = 150_000_000
+
 
 # Below this many rows a loop is in the job-overhead regime: per-superstep
 # planning/scheduling dominates and extra tasks are pure cost (the r14
@@ -51,7 +71,7 @@ MIN_ROWS_PER_TASK = 100_000
 # width must not drop below the available parallelism.
 SMALL_ROWS = 100_000
 
-# Pointer jumping (``jump_col``) starts at this superstep, not at 1: the
+# Pointer jumping (``jump=True``) starts at this superstep, not at 1: the
 # jump self-join adds two state joins + a union to every superstep (~2-4x
 # the superstep constant on a tiny graph, measured on the sf0.1 SCC
 # battery graph whose colorings converge in <= 5 supersteps), while its
@@ -229,6 +249,82 @@ def _ckpt_strip_stats(df: DataFrame, eager: bool) -> DataFrame:
     return DataFrame(wrapped, df.sparkSession)
 
 
+@contextmanager
+def loop_edges(edges: DataFrame, key: str, rows: int):
+    """Scope an iterative loop over ``rows`` measured edge rows and yield
+    ``(edge cache, width)``.
+
+    The width is ``iter_width(rows)``, entered as a ``scoped_shuffle_width``
+    for the whole loop. The edge side is hash-partitioned on ``key`` at
+    that width and persisted, so every superstep's message join co-locates
+    against the cache and only the (much smaller) vertex state moves — the
+    iterative-graph analogue of GraphX caching the graph. The cache is
+    planned inside the scope, so on a small loop its exchanges run with
+    AQE off as well, in the first superstep's job instead of AQE stage
+    jobs of their own. Past DISK_ONLY_ROWS the cache goes DISK_ONLY: a
+    sequential re-read per superstep costs seconds; pinned storage blocks
+    cost the job (the sf50 pagerank OOM, BENCH_SCALE r14). The cache is
+    dropped on exit, so the loop must return checkpointed state that does
+    not depend on it."""
+    spark = edges.sparkSession
+    parts = iter_width(rows, spark)
+    with scoped_shuffle_width(spark, parts, rows=rows):
+        e = edges.repartition(parts, key)
+        e = e.persist(StorageLevel.DISK_ONLY) if rows > DISK_ONLY_ROWS else e.persist()
+        try:
+            yield e, parts
+        finally:
+            e.unpersist()
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], tuple[DataFrame, bool]],
+    max_iter: int,
+    rows: int,
+) -> tuple[DataFrame, bool]:
+    """Run ``step`` for at most ``max_iter`` supersteps; return the final
+    state (``_changed`` dropped) and whether it converged.
+
+    ``step(state, it)`` gets the previous state — from superstep 2 on it
+    still carries that superstep's ``_changed`` flag, which delta loops
+    use as their frontier — and the 1-based superstep number. It returns
+    the next state with a boolean ``_changed`` column, and whether that
+    superstep's plan joins the state with ITSELF (pointer jumping).
+
+    Each superstep is ONE job: a lazy checkpoint whose materialization is
+    fused with the full count of changed rows (r15; count, not isEmpty —
+    isEmpty's limit-1 plan can leave checkpoint partitions uncomputed).
+    Self-join supersteps checkpoint through ``_ckpt_strip_stats``. The
+    loop converges on the first superstep that changes no row.
+
+    Supersteps are never chained lazily between checkpoints: a step reads
+    the previous state more than once (message sender and update side),
+    so a lazy k-chain is a 2^k plan, not a pipeline (r15 A/B at k=4: WCC
+    1.9s -> 25s, MST 5.3s -> 46s)."""
+    for it in range(1, max_iter + 1):
+        nxt, self_join = step(state, it)
+        nxt = (
+            _ckpt_strip_stats(nxt, False)
+            if self_join
+            else nxt.localCheckpoint(eager=False)
+        )
+        if nxt.filter(F.col("_changed")).count() == 0:
+            return nxt.drop("_changed"), True
+        state = nxt
+        if rows > GC_ROWS and it % CHECKPOINT_EVERY == 0:
+            # Old checkpoints' storage blocks are freed only when their
+            # Python DataFrame objects are collected (ContextCleaner acts
+            # on GC; py4j cycles defeat refcounting). Left to chance, a
+            # big-graph run accumulates every superstep's state in the
+            # block store and the executor GC-churns — measured at sf25
+            # (46M vertices): supersteps fluctuated 29-60s vs a flat ~17s
+            # with explicit collection (BENCH_SCALE.md r13). Gated on size
+            # so small loops pay no driver GC for a few MB of blocks.
+            gc.collect()
+    return state.drop("_changed"), False
+
+
 def pregel(
     vertices: DataFrame,
     edges: DataFrame,
@@ -237,11 +333,11 @@ def pregel(
     update: Callable[[DataFrame], DataFrame],
     max_iter: int = 20,
     send_to_src: Optional[Column] = None,
-    checkpoint_every: int = CHECKPOINT_EVERY,
     delta_only: bool = False,
 ) -> DataFrame:
     """Run supersteps until ``max_iter`` or until no row has
-    ``_changed = true`` (if ``update`` emits that column).
+    ``_changed = true`` (if ``update`` emits that column). Returns the
+    state reached, converged or capped.
 
     Parameters
     ----------
@@ -253,7 +349,7 @@ def pregel(
     update : maps the joined frame (old state + ``_msg``, null when no
         message arrived) to the next vertex frame; must keep ``id`` and the
         state columns, and may emit ``_changed`` to request convergence
-        detection.
+        detection. Without it the loop runs exactly ``max_iter`` supersteps.
     delta_only : frontier messaging (r16, guide §2.3 — shuffle fewer
         bytes): only vertices whose ``_changed`` flag was set by the LAST
         update send messages. Sound whenever an unchanged sender's message
@@ -264,129 +360,51 @@ def pregel(
         reached vertex's, every superstep. Requires ``update`` to emit
         ``_changed``; superstep 1 (no flag yet) sends from all vertices.
     """
-    # Materialize the edge frame once, hash-partitioned by the message join
-    # key — every superstep joins against it, and without a persist each
-    # superstep's job re-reads and re-derives the source tables (the
-    # iterative-graph analogue of GraphX caching the graph); with the
-    # partitioning cached, only the (much smaller) vertex state moves per
-    # superstep. Dropped again before returning; the result state is
-    # checkpointed so it never depends on this cache.
-    #
-    # Superstep shuffles run at a width derived from the MEASURED edge
-    # count (~2M edge rows per task — the pagerank/betweenness sizing
-    # rule, centrality.py:104/:263), scoped to the loop and restored in
-    # the finally. On a small graph the session default width (core
-    # count locally, hundreds on a cluster) makes every superstep pay
-    # tens of near-empty tasks across 2 exchanges + a checkpoint — the
-    # r14 betweenness clamp measured this as the dominant cost of
-    # iterate-until-fixpoint below ~100k rows; on a huge graph the same
-    # rule widens the superstep shuffles so per-task state stays bounded
-    # (the sf50 pagerank OOM lesson). The cached edge side must share
-    # the width or every superstep re-exchanges it.
-    spark = vertices.sparkSession
+    return _pregel(
+        vertices, edges, send_to_dst, agg_msg, update, max_iter, send_to_src,
+        delta_only,
+    )[0]
+
+
+def _pregel(
+    vertices, edges, send_to_dst, agg_msg, update, max_iter, send_to_src,
+    delta_only,
+) -> tuple[DataFrame, bool]:
+    """``pregel`` returning ``fixpoint``'s (state, converged) pair."""
+
+    def step(cur: DataFrame, it: int) -> tuple[DataFrame, bool]:
+        sender = cur
+        if not delta_only:
+            cur = sender = cur.drop("_changed")
+        elif "_changed" in cur.columns:
+            # frontier messaging: unchanged vertices' messages are
+            # redundant under a monotone relaxation (see delta_only)
+            sender = cur.filter(F.col("_changed"))
+        v = _prefixed(sender, "v_")
+        msgs = None
+        if send_to_dst is not None:
+            msgs = e.join(v, F.col("e_src") == F.col("v_id"), "inner").select(
+                F.col("e_dst").alias("_mid"), send_to_dst.alias("msg")
+            )
+        if send_to_src is not None:
+            m = e.join(v, F.col("e_dst") == F.col("v_id"), "inner").select(
+                F.col("e_src").alias("_mid"), send_to_src.alias("msg")
+            )
+            msgs = m if msgs is None else msgs.unionByName(m)
+        if msgs is None:
+            raise ValueError("at least one of send_to_dst/send_to_src required")
+        inbox = msgs.groupBy("_mid").agg(agg_msg.alias("_msg"))
+        nxt = update(cur.join(inbox, cur["id"] == inbox["_mid"], "left").drop("_mid"))
+        if "_changed" not in nxt.columns:
+            # no convergence test: every superstep counts as a change
+            nxt = nxt.withColumn("_changed", F.lit(True))
+        return nxt, False
+
     ne = edges.count()
-    eff_parts = iter_width(ne, spark)
-    # Superstep batching REJECTED by measurement (r15): chaining k
-    # supersteps lazily between checkpoints looked like it would replace
-    # 2k driver jobs with 2, but each superstep references the previous
-    # state TWICE (once as the message sender, once as the update join's
-    # left side), so a lazy k-chain is a 2^k plan blowup, not a linear
-    # pipeline — the A/B regressed WCC 1.9s -> 25s and MST 5.3s -> 46s
-    # at k=4. Per-superstep materialization is what keeps the state
-    # single-evaluation; batch stays 1.
-    batch = 1
-    part_key = "e_src" if send_to_dst is not None else "e_dst"
-    e = _prefixed(edges, "e_").repartition(eff_parts, part_key).persist()
-    try:
-        with scoped_shuffle_width(spark, eff_parts, rows=ne):
-            return _pregel_loop(
-                e, vertices, send_to_dst, send_to_src, agg_msg, update,
-                max_iter, checkpoint_every, batch, delta_only,
-            )
-    finally:
-        e.unpersist()
+    key = "e_src" if send_to_dst is not None else "e_dst"
+    with loop_edges(_prefixed(edges, "e_"), key, ne) as (e, _):
+        return fixpoint(vertices, step, max_iter, ne)
 
-
-def _superstep(e, cur, send_to_dst, send_to_src, agg_msg, update, delta_only=False):
-    sender = cur
-    if delta_only and "_changed" in cur.columns:
-        # frontier messaging: unchanged vertices' messages are redundant
-        # under a monotone relaxation — only last superstep's changed
-        # rows send (see pregel() delta_only)
-        sender = cur.filter(F.col("_changed"))
-    v = _prefixed(sender, "v_")
-    msgs = None
-    if send_to_dst is not None:
-        m = e.join(v, F.col("e_src") == F.col("v_id"), "inner").select(
-            F.col("e_dst").alias("_mid"), send_to_dst.alias("msg")
-        )
-        msgs = m
-    if send_to_src is not None:
-        m = e.join(v, F.col("e_dst") == F.col("v_id"), "inner").select(
-            F.col("e_src").alias("_mid"), send_to_src.alias("msg")
-        )
-        msgs = m if msgs is None else msgs.unionByName(m)
-    if msgs is None:
-        raise ValueError("at least one of send_to_dst/send_to_src required")
-    inbox = msgs.groupBy("_mid").agg(agg_msg.alias("_msg"))
-    joined = cur.join(inbox, cur["id"] == inbox["_mid"], "left").drop("_mid")
-    return update(joined)
-
-
-def _pregel_loop(
-    e, vertices, send_to_dst, send_to_src, agg_msg, update, max_iter,
-    checkpoint_every, batch, delta_only=False,
-):
-    cur = vertices
-    it = 0
-    while it < max_iter:
-        nxt = cur
-        has_changed = False
-        for _ in range(min(batch, max_iter - it)):
-            if has_changed:
-                nxt = nxt.drop("_changed")
-            nxt = _superstep(
-                e, nxt, send_to_dst, send_to_src, agg_msg, update, delta_only
-            )
-            has_changed = "_changed" in nxt.columns
-            it += 1
-        checkpointed = False
-        if has_changed:
-            # Lazy checkpoint + full count of changed rows = ONE job per
-            # superstep: the count scans every partition, materializing
-            # the checkpoint as it goes. The previous eager-checkpoint-
-            # then-isEmpty form paid a second job for the same bit
-            # (r15 fusion; count not isEmpty — isEmpty's limit-1 plan can
-            # leave checkpoint partitions uncomputed).
-            nxt = nxt.localCheckpoint(eager=False)
-            checkpointed = True
-            if nxt.filter(F.col("_changed")).count() == 0:
-                return nxt.drop("_changed")
-            if not delta_only:
-                # delta loops carry the flag into the next superstep —
-                # it selects the message senders there
-                nxt = nxt.drop("_changed")
-        elif it % checkpoint_every == 0 or it == max_iter:
-            # always checkpointed on exit so the returned frame does not
-            # depend on the edge cache dropped below
-            nxt = nxt.localCheckpoint(eager=True)
-            checkpointed = True
-        cur = nxt
-        if checkpointed and it % checkpoint_every == 0:
-            # Old checkpoints' storage blocks are freed only when their
-            # Python DataFrame objects are collected (ContextCleaner
-            # acts on GC); left to chance, a big-graph run accumulates
-            # every superstep's state in the block store and the
-            # executor GC-churns — measured at sf25 (46M vertices):
-            # supersteps fluctuated 29-60s, vs a flat ~17s steady
-            # state with explicit collection (BENCH_SCALE.md r13).
-            # Collected on the checkpoint cadence, bounding live
-            # checkpoints to ~checkpoint_every while keeping driver-GC
-            # cost off every small-graph superstep.
-            import gc
-
-            gc.collect()
-    return cur.drop("_changed") if "_changed" in cur.columns else cur
 
 def vertices_from_edges(edges: DataFrame) -> DataFrame:
     """Distinct vertex ids appearing in the edge set."""

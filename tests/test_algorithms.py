@@ -842,3 +842,193 @@ def test_scoped_width_cross_thread_raises(spark):
         t.join()
     assert "error" in result and "another thread" in result["error"]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+# --------------------------------------------------------------------- #
+# the public pregel() kernel and the fixpoint driver
+# --------------------------------------------------------------------- #
+
+
+def _counting(update):
+    """Wrap a pregel ``update`` so the test can read how many supersteps
+    ran: the kernel builds each superstep's plan by calling it once."""
+    calls = []
+
+    def wrapped(j):
+        calls.append(1)
+        return update(j)
+
+    return wrapped, calls
+
+
+def test_pregel_send_to_src_flows_against_edges(spark):
+    """send_to_src messages travel dst -> src: each vertex ends with the
+    max id it can REACH, so on a chain every vertex reads the chain's
+    end (a message along the edges would leave 1 at 2, not 4)."""
+    from pyspark.sql import functions as F
+
+    from grafeo_spark.algorithms.pregel import pregel, vertices_from_edges
+
+    e = edges_df(spark, [(1, 2), (2, 3), (3, 4), (10, 11)])
+    v = vertices_from_edges(e).withColumn("val", F.col("id"))
+
+    def update(j):
+        new = F.greatest(F.col("val"), F.coalesce(F.col("_msg"), F.col("val")))
+        return j.select("id", new.alias("val"), (new > F.col("val")).alias("_changed"))
+
+    out = pregel(
+        v, e, send_to_dst=None, agg_msg=F.max("msg"), update=update,
+        max_iter=20, send_to_src=F.col("v_val"),
+    )
+    assert dict(rows(out)) == {1: 4, 2: 4, 3: 4, 4: 4, 10: 11, 11: 11}
+
+
+def test_pregel_changed_update_stops_at_fixpoint(spark):
+    """A non-delta update that emits _changed stops one superstep after
+    the last change: min-label on a 4-chain changes in supersteps 1-3 and
+    superstep 4 confirms the fixpoint, far below max_iter."""
+    from pyspark.sql import functions as F
+
+    from grafeo_spark.algorithms.pregel import pregel, vertices_from_edges
+
+    e = edges_df(spark, [(1, 2), (2, 3), (3, 4)])
+    v = vertices_from_edges(e).withColumn("lab", F.col("id"))
+
+    def update(j):
+        new = F.least(F.col("lab"), F.coalesce(F.col("_msg"), F.col("lab")))
+        return j.select("id", new.alias("lab"), (new < F.col("lab")).alias("_changed"))
+
+    update, calls = _counting(update)
+    out = pregel(
+        v, e, send_to_dst=F.col("v_lab"), agg_msg=F.min("msg"), update=update,
+        max_iter=50,
+    )
+    assert dict(rows(out)) == {1: 1, 2: 1, 3: 1, 4: 1}
+    assert "_changed" not in out.columns
+    assert len(calls) == 4
+
+
+def test_pregel_update_without_changed_runs_max_iter(spark):
+    """An update without _changed has no convergence test: it runs
+    exactly max_iter supersteps. val += sum of in-neighbour vals on the
+    chain 1->2->3 from val=1 reads {1, 4, 7} after 3 supersteps (after 2
+    it would be {1, 3, 4})."""
+    from pyspark.sql import functions as F
+
+    from grafeo_spark.algorithms.pregel import pregel, vertices_from_edges
+
+    e = edges_df(spark, [(1, 2), (2, 3)])
+    v = vertices_from_edges(e).withColumn("val", F.lit(1).cast("long"))
+
+    def update(j):
+        return j.select(
+            "id", (F.col("val") + F.coalesce(F.col("_msg"), F.lit(0))).alias("val")
+        )
+
+    update, calls = _counting(update)
+    out = pregel(
+        v, e, send_to_dst=F.col("v_val"), agg_msg=F.sum("msg"), update=update,
+        max_iter=3,
+    )
+    assert dict(rows(out)) == {1: 1, 2: 4, 3: 7}
+    assert len(calls) == 3
+
+
+def test_shortest_paths_exhaustion_raises(spark):
+    """A 60-edge unit chain needs 61 supersteps (60 that reach a new
+    vertex plus one that confirms): the default max_iter=50 must raise
+    instead of returning the first 51 distances."""
+    from grafeo_spark.algorithms import dijkstra
+
+    n = 60
+    e = edges_df(
+        spark, [(i, i + 1, 1.0) for i in range(n)], "src long, dst long, weight double"
+    )
+    with pytest.raises(ValueError, match="max_iter"):
+        dijkstra(e, 0)
+    assert dict(rows(dijkstra(e, 0, max_iter=n + 1))) == {
+        i: float(i) for i in range(n + 1)
+    }
+
+
+def test_connected_components_exhaustion_raises(spark):
+    from grafeo_spark.algorithms import connected_components
+
+    e = edges_df(spark, [(i, i + 1) for i in range(10)])
+    with pytest.raises(ValueError, match="max_iter"):
+        connected_components(e, max_iter=3)
+
+
+def _size_in_bytes(df) -> int:
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
+def test_ckpt_strip_stats_resets_size_estimate(spark, monkeypatch):
+    """Pins the private-API stats strip (_jdf, internalCreateDataFrame):
+    the stripped checkpoint reports the session's default size estimate,
+    not the origin plan's, and the state of consecutive pointer-jump
+    supersteps keeps one constant estimate. Without the strip the jump
+    self-join multiplies the estimate every superstep."""
+    import importlib
+
+    # the package re-exports the pregel() function under the module's name
+    pregel_mod = importlib.import_module("grafeo_spark.algorithms.pregel")
+    from grafeo_spark.algorithms.components import _min_label_fixpoint
+    from grafeo_spark.algorithms.pregel import _ckpt_strip_stats, vertices_from_edges
+
+    from pyspark.sql import functions as F
+
+    def chain(n):  # a Range origin: its plan has a finite size estimate
+        return spark.range(n - 1).select(
+            F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+        )
+
+    default = int(spark._jsparkSession.sessionState().conf().defaultSizeInBytes())
+    df = chain(3)
+    assert _size_in_bytes(df.localCheckpoint(eager=False)) != default
+    assert _size_in_bytes(_ckpt_strip_stats(df, False)) == default
+
+    sizes = []
+    real = pregel_mod._ckpt_strip_stats
+
+    def spy(frame, eager):
+        out = real(frame, eager)
+        sizes.append(_size_in_bytes(out))
+        return out
+
+    monkeypatch.setattr(pregel_mod, "_ckpt_strip_stats", spy)
+    n = 64
+    e = chain(n)
+    out = _min_label_fixpoint(e, vertices_from_edges(e), max_iter=n)
+    assert dict(rows(out)) == {i: 0 for i in range(n)}
+    assert len(sizes) >= 3
+    assert sizes[:3] == [default] * 3
+
+
+def test_pagerank_and_betweenness_respect_cross_thread_guard(spark):
+    """PageRank and betweenness scope their width through
+    scoped_shuffle_width, so while another thread holds a scope on the
+    session both raise instead of running at that thread's width."""
+    import threading
+
+    from grafeo_spark.algorithms import betweenness_centrality, pagerank
+    from grafeo_spark.algorithms.pregel import scoped_shuffle_width
+
+    e = edges_df(spark, [(1, 2), (2, 3), (3, 1)])
+    errors: dict = {}
+
+    def other():
+        for name, fn in (("pagerank", pagerank), ("betweenness", betweenness_centrality)):
+            try:
+                fn(e).collect()
+            except RuntimeError as ex:
+                errors[name] = str(ex)
+
+    with scoped_shuffle_width(spark, 3, rows=10):
+        t = threading.Thread(target=other)
+        t.start()
+        t.join(timeout=300)
+        assert not t.is_alive()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert set(errors) == {"pagerank", "betweenness"}
+    assert all("another thread" in msg for msg in errors.values())
