@@ -16,21 +16,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grafeo_spark.algorithms.pregel import (
-    AQE_OFF_ROWS,
     DISK_ONLY_ROWS,
-    GC_ROWS,
-    SMALL_ROWS,
+    collect_garbage,
+    frontier_levels,
+    full_width,
+    iter_width,
     loop_edges,
-    scoped_shuffle_width,
+    storage_level,
     undirect,
     vertices_from_edges,
 )
 
 DRIVER_ALGO_MAX_NODES = 100_000
-
-# betweenness: re-partition the visited set and collect old checkpoints
-# every this many BFS levels
-_CHECKPOINT_EVERY = 3
 
 
 def degree_centrality(edges: DataFrame, direction: str = "both") -> DataFrame:
@@ -120,12 +117,10 @@ def pagerank(
     # aggregation into the session's default partitions plus a memory-
     # held edge cache starved execution memory outright
     # (SparkOutOfMemoryError UNABLE_TO_ACQUIRE_MEMORY, BENCH_SCALE r14).
-    # Past DISK_ONLY_ROWS the per-superstep checkpoints go DISK_ONLY too.
-    from pyspark import StorageLevel
     from pyspark.sql import Observation
 
     ne = int(_init[1] or 0)
-    ckpt_level = StorageLevel.DISK_ONLY if ne > DISK_ONLY_ROWS else None
+    ckpt_level = storage_level(ne)
     it = 0
     # Dangling mass for superstep 1 came from the fused init aggregate
     # above (pr is uniform there); every later superstep's dang (and tol
@@ -134,7 +129,7 @@ def pagerank(
     # superstep (~0.4s × iterations at sf0.1; a full state pass at scale)
     # for a scalar the materializing job already sees every row of.
     cached = edges.select(F.col("src").alias("_es"), F.col("dst").alias("_ed"))
-    with loop_edges(cached, "_es", ne) as (e, _):
+    with loop_edges(cached, "_es", ne, iter_width) as (e, _):
         for it in range(1, max_iter + 1):
             # shuffle_hash hint on the STATE side (r16): without it,
             # Catalyst broadcast-exchanged the EDGE CACHE every superstep
@@ -186,16 +181,7 @@ def pagerank(
             state = state.localCheckpoint(eager=True, storageLevel=ckpt_level)
             vals = obs.get  # collected by the checkpoint job above
             dang = vals["dang"] or 0.0
-            if n > GC_ROWS:
-                # big-state runs only: free the previous superstep's
-                # checkpoint blocks eagerly — see pregel.fixpoint:
-                # unreferenced checkpoints otherwise pile up in the block
-                # store until a chance GC. Gated on n so small-graph runs
-                # don't pay ~0.1s/superstep of driver GC for blocks that
-                # total a few MB.
-                import gc
-
-                gc.collect()
+            collect_garbage(n)
             if tol is not None:
                 delta = vals.get("delta")
                 state = state.drop("_prev")
@@ -212,19 +198,18 @@ def closeness_centrality(
 ) -> DataFrame:
     """Closeness over unweighted shortest paths (centrality.rs:535).
 
-    Uses the level-synchronous all-sources BFS (`reachable_pairs`) — the
+    Uses the level-synchronous all-sources BFS (`bfs_pairs`) — the
     state is bounded by reachable (src,dst) pairs; for very large graphs
-    restrict to a sampled vertex subset upstream.
+    restrict to a sampled vertex subset upstream. ``max_hops=0`` reaches
+    nothing and returns an empty frame.
     """
-    from grafeo_spark.operators.expand import reachable_pairs
+    from grafeo_spark.operators.expand import bfs_pairs
 
     und = undirect(edges.select("src", "dst"))
     n = vertices_from_edges(edges).count()
     # drop src==dst pairs: an undirected walk returns to its origin in two
     # hops, but distance-to-self is 0 by definition
-    pairs = reachable_pairs(und, 1, max_hops, early_exit=True).filter(
-        F.col("src") != F.col("dst")
-    )
+    pairs = bfs_pairs(und, max_hops).filter(F.col("src") != F.col("dst"))
     agg = pairs.groupBy("src").agg(
         F.count("*").alias("r"), F.sum("hops").alias("total")
     )
@@ -258,8 +243,11 @@ def betweenness_centrality(
       deepest level down — delta(v) = Σ_w sigma_v/sigma_w · (1 + delta_w)
       over successor levels, again a join + groupBy per level.
     - Nothing graph-sized ever reaches the driver: the only actions are
-      per-level ``count()`` on eagerly checkpointed frontiers and the
-      final result the caller collects.
+      per-level ``count()`` on checkpointed frontiers and the final
+      result the caller collects.
+
+    Both passes run on ``pregel.loop_edges`` at ``full_width(nv)``, the
+    forward pass on ``pregel.frontier_levels``.
 
     ``sample_sources=k`` runs the pivot BFS from a deterministic k-vertex
     sample (ordered xxhash64(id, seed)) and rescales by n/k — the standard
@@ -279,96 +267,50 @@ def betweenness_centrality(
     if nv == 0:
         return empty
 
-    # Per-level eager checkpoints keep state bounded and lineage flat; on
-    # a SMALL graph the dominant cost is then job overhead × diameter (a
-    # 25-node path = ~50 driver round-trips), so the whole iteration —
-    # including the pre-partitioned edge side, which must share the width
-    # or every level re-exchanges it — runs at a scoped-down partition
-    # count with AQE off (~2·diameter tiny per-level jobs: AQE's
-    # per-exchange re-planning dominates them, the pregel.AQE_OFF_ROWS
-    # rationale). A bigger graph keeps the session's width and AQE; the
-    # scope then only guards the session against a concurrent loop.
-    small = nv <= SMALL_ROWS
-    eff_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if small:
-        eff_parts = min(eff_parts, 4)
-    with scoped_shuffle_width(spark, eff_parts, rows=nv if small else AQE_OFF_ROWS):
-        # hash-partition edges on the join key ONCE: every forward level and
-        # every reverse level joins on id == src, so a pre-partitioned edge
-        # side never re-exchanges (2·diameter exchanges saved; the frontier
-        # side shuffles regardless since it arrives grouped by (source, id))
-        # lazy: the first forward level's count materializes the
-        # repartitioned edge side and lvl0 together (r15 fusion)
-        e = e.repartition(eff_parts, "src").localCheckpoint(eager=False)
+    sources = verts
+    n_sources = nv
+    if sample_sources is not None and sample_sources < nv:
+        sources = verts.orderBy(
+            F.xxhash64(F.col("id"), F.lit(seed)), F.col("id")
+        ).limit(sample_sources)
+        n_sources = sample_sources
 
-        sources = verts
-        n_sources = nv
-        if sample_sources is not None and sample_sources < nv:
-            sources = verts.orderBy(
-                F.xxhash64(F.col("id"), F.lit(seed)), F.col("id")
-            ).limit(sample_sources)
-            n_sources = sample_sources
-
-        # ---- forward multi-source BFS with shortest-path counts ------
+    # every forward and every reverse level joins on id == src, so the
+    # edge cache is partitioned on src once for both passes. Below
+    # DISK_ONLY_ROWS the reverse pass is planned here but runs in the
+    # caller's action, after the cache is dropped: its edge reads then
+    # come from the cache's shuffle output, which the forward pass wrote.
+    # The merge hint keeps each level's join co-partitioned against the
+    # cache: a materialized cache under the broadcast threshold would
+    # otherwise be broadcast, one job per level.
+    with loop_edges(e, "src", nv, full_width) as (e, _):
         return _betweenness_core(
-            e, verts, nv, sources, n_sources, eff_parts, normalized, directed,
-            empty,
+            e.hint("merge"), verts, nv, sources, n_sources, normalized,
+            directed, empty,
         )
 
 
-def _betweenness_core(
-    e, verts, nv, sources, n_sources, eff_parts, normalized, directed, empty,
-):
-    import gc
-
-    from pyspark import StorageLevel
-
+def _betweenness_core(e, verts, nv, sources, n_sources, normalized, directed, empty):
+    # ---- forward multi-source BFS with shortest-path counts ------
     lvl0 = sources.select(
         F.col("id").alias("source"), F.col("id"), F.lit(1.0).alias("sigma")
-    ).localCheckpoint(eager=False)  # materialized by level 1's count
-    levels = [lvl0]
-    visited = lvl0.select("source", "id")
-    frontier = lvl0
-    seen_rows = n_sources
-    # The algorithm's memory envelope is the RETAINED level set: every
-    # forward level's checkpoint stays pinned until the reverse pass has
-    # consumed it. Past the same single-node boundary pagerank uses
-    # (DISK_ONLY_ROWS retained rows) new checkpoints switch to
-    # DISK_ONLY: a sequential re-read per level costs seconds; pinned
-    # memory blocks cost the job (the sf50 pagerank lesson, r14).
-    ckpt_level = None
-    d = 0
-    while d <= nv:
-        d += 1
-        nxt = (
+    )
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(e, frontier["id"] == e["src"])
             .select(F.col("source"), F.col("dst").alias("id"), F.col("sigma"))
             .groupBy("source", "id")
             .agg(F.sum("sigma").alias("sigma"))
-            .join(visited, ["source", "id"], "left_anti")
-            # lazy + count fusion: one job per level (r15; see pregel.py)
-            .localCheckpoint(eager=False, storageLevel=ckpt_level)
         )
-        n_new = nxt.count()
-        if n_new == 0:
-            break
-        seen_rows += n_new
-        if seen_rows > DISK_ONLY_ROWS:
-            ckpt_level = StorageLevel.DISK_ONLY
-        levels.append(nxt)
-        visited = visited.unionByName(nxt.select("source", "id"))
-        if d % _CHECKPOINT_EVERY == 0:
-            # hash-partition the seen state on the anti-join key, sized to
-            # the observed state (the reachable_pairs pattern) so per-task
-            # state stays bounded however large the reachable set grows;
-            # explicit gc frees superseded checkpoint blocks (py4j cycles
-            # defeat refcounting — the pregel.py r13 finding).
-            parts = max(eff_parts, -(-seen_rows // 2_000_000))
-            visited = visited.repartition(parts, "source", "id").localCheckpoint(
-                eager=True, storageLevel=ckpt_level
-            )
-            gc.collect()
-        frontier = nxt
+
+    # a shortest path has at most nv - 1 edges: nv levels including lvl0
+    levels, seen_rows = frontier_levels(lvl0, step, ["source", "id"], nv, nv)
+    # The algorithm's memory envelope is the RETAINED level set: every
+    # forward level's checkpoint stays pinned until the reverse pass has
+    # consumed it, so the reverse checkpoints follow the storage rule of
+    # the seen rows.
+    ckpt_level = storage_level(seen_rows)
 
     # ---- reverse dependency accumulation, deepest level first --------
     deepest = len(levels) - 1
@@ -419,8 +361,7 @@ def _betweenness_core(
         # set SHRINKS through the reverse pass instead of peaking at
         # forward-total + reverse-total
         levels[lev + 1] = None
-        if lev % _CHECKPOINT_EVERY == 0:
-            gc.collect()
+        collect_garbage(seen_rows)
 
     # deepest-level deltas are 0 (no successors) and the source itself
     # (level 0) is excluded by Brandes (w != s) — only levels 1..D-1

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from grafeo_spark.algorithms.pregel import (
     fixpoint,
+    iter_width,
     loop_edges,
     undirect,
     vertices_from_edges,
@@ -58,7 +59,7 @@ def label_propagation(edges: DataFrame, max_iter: int = 10) -> DataFrame:
         )
         return nxt, False
 
-    with loop_edges(und, "dst", n_und) as (e, _):
+    with loop_edges(und, "dst", n_und, iter_width) as (e, _):
         labels = vertices_from_edges(edges).withColumn("label", F.col("id"))
         return fixpoint(labels, step, max_iter, n_und)[0]
 

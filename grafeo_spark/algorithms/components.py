@@ -16,6 +16,7 @@ from grafeo_spark.algorithms.pregel import (
     JUMP_AFTER,
     fixpoint,
     full_width,
+    iter_width,
     loop_edges,
     scoped_shuffle_width,
     undirect,
@@ -308,7 +309,7 @@ def _min_label_fixpoint(
         )
         return nxt, use_jump
 
-    with loop_edges(cached, "_es", ne) as (e, w):
+    with loop_edges(cached, "_es", ne, iter_width) as (e, w):
         state = (
             vertices.select("id", F.col("id").alias("color"))
             .repartition(w, "id")

@@ -39,30 +39,32 @@ def bfs(
     directed: bool = True,
 ) -> DataFrame:
     """(id, parent-agnostic) BFS layers: (source, id, depth) per reached
-    vertex (traversal.rs:376 'layers' output).
+    vertex (traversal.rs:376 'layers' output), depths 0..max_depth.
 
-    Always early-exit: per-level eager checkpoints make each level's
-    frontier and seen-set materialize exactly once — measured 2x faster
-    than the fully-lazy plan even at depth 3, because the lazy all_seen
+    Runs on ``bfs_pairs``: each level is a lazy checkpoint materialized
+    by its own count, one job per level, and the walk stops at the first
+    empty level. Materializing every level once measured 2x faster than
+    the fully-lazy plan even at depth 3, because the lazy all_seen
     anti-join chain re-derives every prior level per branch.
 
     Matches bfs_layers' discovery contract (traversal.rs:140-168): the
     source is discovered at depth 0 and never re-emitted (a self-loop or
     cycle back to it is dropped), and a source absent from the graph
     yields NO rows (get_node(start).is_none() -> empty layers; vertex
-    existence in the edge-list model = appears as some edge endpoint)."""
-    from grafeo_spark.operators.expand import reachable_pairs
+    existence in the edge-list model = appears as some edge endpoint).
+    ``max_depth=0`` returns the depth-0 rows only."""
+    from grafeo_spark.operators.expand import bfs_pairs
 
     e = edges.select("src", "dst")
     if not directed:
         e = undirect(e)
     src = _source_df(edges, sources).join(
         vertices_from_edges(e), "id", "left_semi"
-        # lazy: reachable_pairs' seed-frontier count materializes it in the
-        # same job; both consumers (seed, zero-depth rows) share the one
+        # lazy: bfs_pairs' seed-level count materializes it in the same
+        # job; both consumers (seed, zero-depth rows) share the one
         # computation (r15 fusion)
     ).localCheckpoint(eager=False)
-    pairs = reachable_pairs(e, 1, max_depth, src_ids=src, early_exit=True)
+    pairs = bfs_pairs(e, max_depth, src_ids=src)
     zero = src.select(
         F.col("id").alias("source"), F.col("id"), F.lit(0).cast("long").alias("depth")
     )

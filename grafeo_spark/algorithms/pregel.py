@@ -10,20 +10,38 @@ loop of
 i.e. GraphX ``aggregateMessages`` semantics expressed as DataFrame joins.
 The loop machinery around that join exists once, here:
 
-- ``loop_edges`` sizes the loop width from the measured edge rows
-  (``iter_width``), scopes it (``scoped_shuffle_width``), and caches the
-  edge side co-partitioned on the message-join key for the loop's
-  lifetime.
+- ``loop_edges`` sizes the loop width from the measured edge rows with
+  the caller's width rule (``iter_width`` for message-passing loops,
+  ``full_width`` for frontier loops), scopes it
+  (``scoped_shuffle_width``), and caches the edge side co-partitioned on
+  the join key for the loop's lifetime.
 - ``fixpoint`` drives the supersteps. A step function maps the previous
   state to the next one, which carries a boolean ``_changed`` column, and
   says whether its plan self-joins the state (pointer jumping). The
   driver lazily checkpoints each new state (stripping inherited size
   statistics on self-join supersteps) and fuses that checkpoint with the
   count of changed rows: one job per superstep, which is also the
-  convergence test. It collects old checkpoints on big loops and reports
-  whether the loop converged; what exhaustion means is the caller's call.
-- ``pregel`` is the generic step on top of both: message join, one
-  aggregate per target, and a left-outer update.
+  convergence test. It reports whether the loop converged; what
+  exhaustion means is the caller's call.
+- ``frontier_levels`` drives level-synchronous BFS (Pregelix's join then
+  group-by per level). A step function maps one level to the next
+  level's candidate rows; the driver anti-joins them against the seen
+  set, fuses the level's lazy checkpoint with its count (one job per
+  level), stops on the first empty level, and keeps the seen set
+  hash-partitioned on its keys, re-partitioned every
+  ``SEEN_REPARTITION_EVERY`` levels at a width sized to the seen rows.
+  BFS, closeness, SPARQL closures (``operators.expand.bfs_pairs``) and
+  betweenness's forward pass run on it.
+- ``pregel`` is the generic step on top of ``fixpoint``: message join,
+  one aggregate per target, and a left-outer update.
+
+Two rules hold for every loop:
+
+- Storage (``storage_level``): a loop's cached and checkpointed frames go
+  DISK_ONLY past ``DISK_ONLY_ROWS`` rows.
+- GC (``collect_garbage``): once a loop's rows exceed ``GC_ROWS``, the
+  driver runs ``gc.collect()`` after each materialized superstep or
+  level, so superseded checkpoints free their blocks.
 
 Column conventions inside ``send_*`` expressions:
 - vertex state columns of the *sending* side are prefixed ``v_``
@@ -41,10 +59,12 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Loops over more than GC_ROWS measured rows collect Python garbage every
-# CHECKPOINT_EVERY supersteps (see fixpoint).
-CHECKPOINT_EVERY = 4
+# Loops over more than GC_ROWS measured rows collect Python garbage after
+# every materialized superstep or level (see collect_garbage).
 GC_ROWS = 2_000_000
+
+# frontier_levels re-partitions its seen set after every this many levels.
+SEEN_REPARTITION_EVERY = 3
 
 # Target edge/state rows per task for iterative-loop shuffles — the
 # pagerank/betweenness sizing rule (centrality.py:104): width grows with
@@ -61,7 +81,7 @@ ROWS_PER_TASK = 2_000_000
 MIN_ROWS_PER_TASK = 100_000
 
 # The documented single-node boundary (~150M rows, BENCH_SCALE r14): past
-# it a loop's cached and retained frames go DISK_ONLY.
+# it a loop's cached and retained frames go DISK_ONLY (see storage_level).
 DISK_ONLY_ROWS = 150_000_000
 
 
@@ -159,11 +179,10 @@ class scoped_shuffle_width:
     restore it on exit (exception-safe — the r14 betweenness ADVICE
     lesson: any work between the set and the try leaks the width).
 
-    Below AQE_OFF_ROWS measured input rows (or, when ``rows`` is not
-    supplied, in the width-clamped tiny regime) AQE is scoped OFF as
-    well: each superstep job pays AQE's per-exchange re-optimization for
-    data where runtime skew handling has nothing to do (measured ~12% on
-    tiny loops, ~30% on the sf0.1 pagerank). At real sizes AQE stays on
+    Below AQE_OFF_ROWS measured input rows AQE is scoped OFF as well:
+    each superstep job pays AQE's per-exchange re-optimization for data
+    where runtime skew handling has nothing to do (measured ~12% on tiny
+    loops, ~30% on the sf0.1 pagerank). At real sizes AQE stays on
     — skew/coalescing matter exactly there.
 
     SCOPE IS SESSION-GLOBAL: ``spark.conf.set`` applies to every query the
@@ -172,14 +191,12 @@ class scoped_shuffle_width:
     while ANOTHER THREAD holds one on the same session raises — the
     alternative is silent cross-contamination of both loops' widths."""
 
-    def __init__(self, spark, parts: int, rows: int | None = None):
+    def __init__(self, spark, parts: int, rows: int):
         self._spark = spark
         self._parts = int(parts)
         self._prev = spark.conf.get("spark.sql.shuffle.partitions", "200")
         self._prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        self._aqe_off = (
-            (self._parts <= 4) if rows is None else (rows < AQE_OFF_ROWS)
-        )
+        self._aqe_off = rows < AQE_OFF_ROWS
 
     def __enter__(self):
         import threading
@@ -249,28 +266,56 @@ def _ckpt_strip_stats(df: DataFrame, eager: bool) -> DataFrame:
     return DataFrame(wrapped, df.sparkSession)
 
 
+def storage_level(rows: int) -> StorageLevel:
+    """The storage rule for a loop's cached and checkpointed frames over
+    ``rows`` rows: DISK_ONLY past DISK_ONLY_ROWS, where a sequential
+    re-read per superstep costs seconds but pinned storage blocks cost the
+    job (the sf50 pagerank OOM, BENCH_SCALE r14); below it, memory and
+    disk, Spark's default for both ``persist`` and ``localCheckpoint``."""
+    if rows > DISK_ONLY_ROWS:
+        return StorageLevel.DISK_ONLY
+    return StorageLevel.MEMORY_AND_DISK_DESER
+
+
+def collect_garbage(rows: int) -> None:
+    """The GC rule, run after each materialized superstep or level of a
+    loop over ``rows`` rows.
+
+    Old checkpoints' storage blocks are freed only when their Python
+    DataFrame objects are collected (ContextCleaner acts on GC; py4j
+    cycles defeat refcounting). Left to chance, a big-graph run
+    accumulates every superstep's state in the block store and the
+    executor GC-churns: measured at sf25 (46M vertices), PageRank
+    supersteps fluctuated 29-60s vs a flat ~17s with a collection after
+    every superstep (564s -> 475s, BENCH_SCALE.md r13). Gated on GC_ROWS
+    so small loops pay no driver GC for a few MB of blocks."""
+    if rows > GC_ROWS:
+        gc.collect()
+
+
 @contextmanager
-def loop_edges(edges: DataFrame, key: str, rows: int):
+def loop_edges(
+    edges: DataFrame, key: str, rows: int, width: Callable[[int, object], int]
+):
     """Scope an iterative loop over ``rows`` measured edge rows and yield
     ``(edge cache, width)``.
 
-    The width is ``iter_width(rows)``, entered as a ``scoped_shuffle_width``
-    for the whole loop. The edge side is hash-partitioned on ``key`` at
-    that width and persisted, so every superstep's message join co-locates
-    against the cache and only the (much smaller) vertex state moves — the
-    iterative-graph analogue of GraphX caching the graph. The cache is
-    planned inside the scope, so on a small loop its exchanges run with
-    AQE off as well, in the first superstep's job instead of AQE stage
-    jobs of their own. Past DISK_ONLY_ROWS the cache goes DISK_ONLY: a
-    sequential re-read per superstep costs seconds; pinned storage blocks
-    cost the job (the sf50 pagerank OOM, BENCH_SCALE r14). The cache is
-    dropped on exit, so the loop must return checkpointed state that does
-    not depend on it."""
+    The width is ``width(rows, spark)`` — ``iter_width`` for loops that
+    move only small state against the cache, ``full_width`` for frontier
+    loops that re-shuffle a growing state every level — entered as a
+    ``scoped_shuffle_width`` for the whole loop. The edge side is
+    hash-partitioned on ``key`` at that width and persisted at
+    ``storage_level(rows)``, so every superstep's join co-locates against
+    the cache and only the other side moves — the iterative-graph
+    analogue of GraphX caching the graph. The cache is planned inside the
+    scope, so on a small loop its exchanges run with AQE off as well, in
+    the first superstep's job instead of AQE stage jobs of their own. The
+    cache is dropped on exit, so the loop must return checkpointed state
+    that does not depend on it."""
     spark = edges.sparkSession
-    parts = iter_width(rows, spark)
+    parts = width(rows, spark)
     with scoped_shuffle_width(spark, parts, rows=rows):
-        e = edges.repartition(parts, key)
-        e = e.persist(StorageLevel.DISK_ONLY) if rows > DISK_ONLY_ROWS else e.persist()
+        e = edges.repartition(parts, key).persist(storage_level(rows))
         try:
             yield e, parts
         finally:
@@ -312,17 +357,64 @@ def fixpoint(
         if nxt.filter(F.col("_changed")).count() == 0:
             return nxt.drop("_changed"), True
         state = nxt
-        if rows > GC_ROWS and it % CHECKPOINT_EVERY == 0:
-            # Old checkpoints' storage blocks are freed only when their
-            # Python DataFrame objects are collected (ContextCleaner acts
-            # on GC; py4j cycles defeat refcounting). Left to chance, a
-            # big-graph run accumulates every superstep's state in the
-            # block store and the executor GC-churns — measured at sf25
-            # (46M vertices): supersteps fluctuated 29-60s vs a flat ~17s
-            # with explicit collection (BENCH_SCALE.md r13). Gated on size
-            # so small loops pay no driver GC for a few MB of blocks.
-            gc.collect()
+        collect_garbage(rows)
     return state.drop("_changed"), False
+
+
+def frontier_levels(
+    seed: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    keys: list[str],
+    max_levels: int,
+    rows: int,
+) -> tuple[list[DataFrame], int]:
+    """Level-synchronous frontier loop; return the checkpointed non-empty
+    levels, ``seed`` first, and their total row count.
+
+    ``step(level)`` maps one level to the next level's candidate rows
+    (a join against a ``loop_edges`` cache of ``rows`` edges, then a
+    dedup or aggregate on ``keys``). The driver anti-joins them against
+    every earlier level on ``keys``, so a row appears only at the level
+    that first reaches it, and runs at most ``max_levels`` levels.
+
+    Each level is ONE job: a lazy checkpoint at ``storage_level`` of the
+    rows seen so far, materialized by the level's full count (r15 fusion),
+    which is also the stop test — the loop ends on the first empty level.
+    The seen set is a union of the levels' keys; no distinct is needed,
+    since every level is anti-joined against it, and re-deduping would
+    shuffle the whole seen set every level (the superlinear watermark of
+    the r8 sf25 measurement, BENCH_SCALE.md). Every
+    SEEN_REPARTITION_EVERY levels it is re-partitioned on ``keys`` at
+    ``max(full_width(rows), seen/ROWS_PER_TASK)``, so each anti-join reuses
+    that partitioning and per-task state stays bounded however large the
+    reachable set grows. That re-partition is a lazy checkpoint too: the
+    next level's job materializes it, and after the final level it is not
+    built at all."""
+    width = full_width(rows, seed.sparkSession)
+    levels: list[DataFrame] = []
+    seen = None
+    seen_rows = 0
+    nxt = seed
+    for level in range(1, max_levels + 1):
+        if levels:
+            nxt = step(levels[-1]).join(seen, keys, "left_anti")
+        nxt = nxt.localCheckpoint(eager=False, storageLevel=storage_level(seen_rows))
+        n_new = nxt.count()
+        if n_new == 0:
+            break
+        seen_rows += n_new
+        levels.append(nxt)
+        if level == max_levels:
+            break
+        part = nxt.select(*keys)
+        seen = part if seen is None else seen.unionByName(part)
+        if level % SEEN_REPARTITION_EVERY == 0:
+            parts = max(width, -(-seen_rows // ROWS_PER_TASK))
+            seen = seen.repartition(parts, *keys).localCheckpoint(
+                eager=False, storageLevel=storage_level(seen_rows)
+            )
+        collect_garbage(seen_rows)
+    return levels, seen_rows
 
 
 def pregel(
@@ -402,7 +494,7 @@ def _pregel(
 
     ne = edges.count()
     key = "e_src" if send_to_dst is not None else "e_dst"
-    with loop_edges(_prefixed(edges, "e_"), key, ne) as (e, _):
+    with loop_edges(_prefixed(edges, "e_"), key, ne, iter_width) as (e, _):
         return fixpoint(vertices, step, max_iter, ne)
 
 

@@ -105,7 +105,7 @@ def _path_frame(ts: TripleStore, p, seeds: Optional[DataFrame] = None) -> DataFr
     sequence/alternative (unionAll, join), set semantics for closures
     (distinct reachability) per the SPARQL spec. ``seeds`` restricts a
     closure's BFS to the bound subject."""
-    from grafeo_spark.operators.expand import reachable_pairs
+    from grafeo_spark.operators.expand import bfs_pairs
 
     if isinstance(p, P.Iri):
         return ts.df.filter(F.col("p") == p.value).select(
@@ -158,16 +158,11 @@ def _path_frame(ts: TripleStore, p, seeds: Optional[DataFrame] = None) -> DataFr
         if p.max_hops == 1:  # p? — zero-or-one, no BFS needed
             hops = base.distinct()
         else:
-            # early_exit: per-level eager checkpoint + stop on an empty
-            # frontier — without it the 16-level lazy plan compounds
-            # join+distinct+anti-join into an analysis-time blowup, and
-            # closures usually terminate early
-            hops = reachable_pairs(
-                base,
-                1,
-                p.max_hops or PATH_PLUS_MAX_HOPS,
-                src_ids=seeds,
-                early_exit=True,
+            # level by level, stopping on an empty frontier — a 16-level
+            # lazy plan compounds join+distinct+anti-join into an
+            # analysis-time blowup, and closures usually terminate early
+            hops = bfs_pairs(
+                base, p.max_hops or PATH_PLUS_MAX_HOPS, src_ids=seeds
             ).select("src", "dst")
         if p.min_hops == 0:
             zero = (

@@ -42,14 +42,6 @@ from pyspark.sql import functions as F
 
 _CHECKPOINT_EVERY = 3
 
-# Target seen-pair rows per dedup task in reachable_pairs' early-exit
-# (algorithm) path: ~2M (origin, cur) longs ≈ 32 MB keeps the per-level
-# anti-join state comfortably in executor memory; scale-out absorbs the
-# same state with more executors. Env-tunable for deployment sizing.
-import os as _os
-
-_BFS_ROWS_PER_TASK = int(_os.environ.get("SPARK_GRAFT_BFS_ROWS_PER_TASK", "2000000"))
-
 Edges = Union[DataFrame, Sequence[DataFrame]]
 
 
@@ -239,24 +231,22 @@ def reachable_pairs(
     min_hops: int,
     max_hops: int,
     src_ids: Optional[DataFrame] = None,
-    early_exit: bool = False,
     pairs_distinct: bool = False,
 ) -> DataFrame:
-    """Distinct (src, dst, hops=first reached) — BFS with per-level dedup.
+    """Distinct (src, dst, hops=first reached) — BFS with per-level dedup,
+    as one lazy plan for the query compiler's small hop caps (a lazy
+    checkpoint every ``_CHECKPOINT_EVERY`` hops bounds the plan depth).
+    Algorithm callers with large caps use :func:`bfs_pairs`, which runs
+    the levels eagerly and stops at the first empty one.
 
     The scale path: frontier size is bounded by reachable pairs, not path
     count, so a dense 100 TB graph cannot blow up the intermediate state the
     way enumerating trails would.
 
-    ``early_exit=True`` checks frontier emptiness each level (one action +
-    eager checkpoint per hop) and stops — required for large ``max_hops``
-    (algorithm callers); query compilation keeps the default fully-lazy
-    plan for its small hop caps.
-
     Dedup strategy: the OUTPUT is always pair-distinct. With a single edge
     frame, ``pairs_distinct=True`` declares its (src, dst) pairs already
-    distinct, skipping the edge-set dedup shuffle (algorithm callers reuse
-    the deduped frame across every hop, so pre-dedup pays off there). With a
+    distinct, skipping the edge-set dedup shuffle (otherwise the frame is
+    deduped once and the result reused across every hop). With a
     per-hop frame LIST (the compiler's seeded path), edge frames are never
     pre-deduped — the frontier is deduped after each hop join instead, so
     the shuffle is bounded by the frontier size, not |E| (at 100 TB,
@@ -268,8 +258,8 @@ def reachable_pairs(
     eff_max = min(max_hops, len(raw))
     if eff_max == 0:
         raise ValueError("reachable_pairs: no hop frames")
-    # preserve object identity across hops sharing a frame so the dedup /
-    # checkpoint caches below fire once per distinct frame, not once per hop
+    # preserve object identity across hops sharing a frame so the dedup
+    # fires once per distinct frame, not once per hop
     xform: dict[int, DataFrame] = {}
     for e in raw:
         if id(e) not in xform:
@@ -278,74 +268,17 @@ def reachable_pairs(
                 pe if (is_list or pairs_distinct) else pe.distinct()
             )
     hop_e = [xform[id(e)] for e in raw]
-    ckpt: dict[int, DataFrame] = {}
 
-    def _hop(i: int) -> DataFrame:
-        if not early_exit:
-            return hop_e[i]
-        if id(hop_e[i]) not in ckpt:
-            # lazy: the seed-frontier count below materializes the hop
-            # frame as a dependency in the SAME job (r15 fusion — the
-            # eager form paid a standalone checkpoint job per distinct
-            # hop frame before the loop even started)
-            ckpt[id(hop_e[i])] = hop_e[i].localCheckpoint(eager=False)
-        return ckpt[id(hop_e[i])]
-
-    frontier = _seed(_hop(0), src_ids).select(
+    frontier = _seed(hop_e[0], src_ids).select(
         F.col("_esrc").alias("origin"), F.col("_edst").alias("cur")
     )
     if is_list or not pairs_distinct:
         frontier = frontier.distinct()
-    if early_exit:
-        # lazy + the count two lines down = ONE materializing job for
-        # seed frontier and hop-0 frame together (r15 fusion)
-        frontier = frontier.localCheckpoint(eager=False)
     results = [frontier.withColumn("hops", F.lit(1))] if min_hops <= 1 else []
     hop = 1
     all_seen = frontier
-    seen_rows = frontier.count() if early_exit else 0
-    # Early-exit loops run one job per level. Width follows the measured
-    # hop-0 edge frame and AQE is scoped off below the crossover (the
-    # pregel sizing rules), and — critically — each distinct hop frame
-    # is re-partitioned ON THE JOIN KEY once at that width (the
-    # pregel/pagerank edge-cache pattern): the per-level join then
-    # co-locates against the cached edge partitioning and only the
-    # (much smaller) frontier exchanges per level. Without this, AQE-off
-    # forced a full edge-frame shuffle EVERY level (AQE used to
-    # broadcast the tiny frontier at runtime instead) — measured 2x
-    # worse on bfs than either alternative; with it, the loop beats the
-    # AQE plan. The seen-state repartitions below read the scoped width
-    # as their floor, so the rules compose. The scope only covers the
-    # loop's jobs; the returned union executes under session settings.
-    import contextlib
-
-    if early_exit:
-        from grafeo_spark.algorithms.pregel import full_width, scoped_shuffle_width
-
-        spark_ = frontier.sparkSession
-        loop_rows = max(_hop(0).count(), seen_rows)
-        # full_width, not iter_width: the loop STATE (reachable pairs)
-        # outgrows the hop-0 proxy and the per-level distinct/anti-join
-        # shuffles it — all-sources closeness measured 19.6s at the
-        # narrow band width vs ~4s at the parallelism floor
-        _w = full_width(loop_rows, spark_)
-        _scope = scoped_shuffle_width(spark_, _w, rows=loop_rows)
-        part_e: dict[int, DataFrame] = {}
-
-        def _hop(i: int) -> DataFrame:  # noqa: F811 — loop-side variant
-            key = id(hop_e[i])
-            if key not in part_e:
-                part_e[key] = (
-                    ckpt.get(key, hop_e[i])
-                    .repartition(_w, "_esrc")
-                    .localCheckpoint(eager=False)
-                )
-            return part_e[key]
-    else:
-        _scope = contextlib.nullcontext()
-    with _scope:
-     while hop < eff_max:
-        e = _hop(hop)
+    while hop < eff_max:
+        e = hop_e[hop]
         hop += 1
         nxt = (
             frontier.join(e, frontier["cur"] == e["_esrc"], "inner")
@@ -353,17 +286,7 @@ def reachable_pairs(
             .distinct()
             .join(all_seen, ["origin", "cur"], "left_anti")
         )
-        if early_exit:
-            # lazy checkpoint + full count = ONE job per level (the count
-            # scans every partition, materializing the checkpoint as it
-            # goes) — the eager-checkpoint-then-count form paid a second
-            # job per level for the same information (r15 fusion)
-            nxt = nxt.localCheckpoint(eager=False)
-            n_new = nxt.count()
-            if n_new == 0:
-                break
-            seen_rows += n_new
-        elif hop % _CHECKPOINT_EVERY == 0:
+        if hop % _CHECKPOINT_EVERY == 0:
             nxt = nxt.localCheckpoint(eager=False)
         frontier = nxt
         # NO distinct here: frontier is already pair-distinct AND
@@ -372,20 +295,6 @@ def reachable_pairs(
         # state every level, the superlinear watermark the r8 sf25
         # measurement hit (BENCH_SCALE.md third decade).
         all_seen = all_seen.unionByName(frontier)
-        if early_exit and hop % _CHECKPOINT_EVERY == 0:
-            # hash-partition the seen state by the anti-join key with a
-            # partition count scaled to the OBSERVED state size (the r8
-            # verdict's shuffle-partition knob, wired): each level's
-            # left_anti then reuses this partitioning (no exchange on
-            # the big side), and per-task state stays bounded no matter
-            # how large the reachable set grows.
-            default_parts = int(
-                all_seen.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            parts = max(default_parts, -(-seen_rows // _BFS_ROWS_PER_TASK))
-            all_seen = all_seen.repartition(parts, "origin", "cur").localCheckpoint(
-                eager=True
-            )
         if hop >= min_hops:
             results.append(frontier.withColumn("hops", F.lit(hop)))
 
@@ -397,6 +306,53 @@ def reachable_pairs(
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
+    return out.select(F.col("origin").alias("src"), F.col("cur").alias("dst"), "hops")
+
+
+def bfs_pairs(
+    edges: DataFrame, max_hops: int, src_ids: Optional[DataFrame] = None
+) -> DataFrame:
+    """Distinct (src, dst, hops=first reached) for 1 <= hops <= max_hops
+    over one (src, dst) edge frame — :func:`reachable_pairs`' result, run
+    by ``pregel.frontier_levels`` one level per job and stopped at the
+    first empty level. For algorithm callers (BFS, closeness, SPARQL
+    closures), whose hop caps are large and whose walks usually end well
+    before them; each level materializes once instead of every later
+    level's anti-join re-deriving it. ``src_ids`` (first column) seeds
+    hop 1. ``max_hops=0`` returns no rows.
+
+    The edge set is deduped once and cached hash-partitioned on its
+    source at ``full_width``, not ``iter_width``: the loop state
+    (reachable pairs) outgrows the edge count and every level's distinct
+    and anti-join shuffle it — all-sources closeness measured 19.6s at
+    the narrow band width vs ~4s at the parallelism floor (r15)."""
+    from grafeo_spark.algorithms.pregel import frontier_levels, full_width, loop_edges
+
+    e = edges.select(F.col("src").alias("_esrc"), F.col("dst").alias("_edst"))
+    # lazy: the count materializes the deduped edge set it sizes the loop by
+    e = e.distinct().localCheckpoint(eager=False)
+    rows = e.count()
+    with loop_edges(e, "_esrc", rows, full_width) as (cache, _):
+        # merge hint: join co-partitioned against the cache, never
+        # broadcast it (one job per level once it is materialized small)
+        hinted = cache.hint("merge")
+
+        def step(frontier: DataFrame) -> DataFrame:
+            return (
+                frontier.join(hinted, frontier["cur"] == hinted["_esrc"])
+                .select(F.col("origin"), F.col("_edst").alias("cur"))
+                .distinct()
+            )
+
+        # distinct edges make the seed pair-distinct already
+        seed = _seed(cache, src_ids).select(
+            F.col("_esrc").alias("origin"), F.col("_edst").alias("cur")
+        )
+        levels, _ = frontier_levels(seed, step, ["origin", "cur"], max_hops, rows)
+    # limit(0) plans as an empty relation, which the unions below drop
+    out = seed.withColumn("hops", F.lit(0)).limit(0)
+    for hops, level in enumerate(levels, 1):
+        out = out.unionByName(level.withColumn("hops", F.lit(hops)))
     return out.select(F.col("origin").alias("src"), F.col("cur").alias("dst"), "hops")
 
 

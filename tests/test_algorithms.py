@@ -236,6 +236,26 @@ def test_closeness_path_graph(spark):
     assert abs(out[1] - (2 / 3) * 1.0) < 1e-9  # (r/total)*(r/(n-1)) = (2/3)*(2/2)
 
 
+@pytest.mark.parametrize("max_hops", [20, 0])
+def test_closeness_long_path_closed_form(spark, max_hops):
+    from grafeo_spark.algorithms import closeness_centrality
+
+    # undirected path 0-1-..-6: vertex i reaches every j with
+    # 0 < |i-j| <= max_hops at distance |i-j|, so WF-improved closeness is
+    # (r/total)*(r/(n-1)) in closed form; max_hops=0 reaches nothing
+    n = 7
+    want = {}
+    for i in range(n):
+        d = [abs(i - j) for j in range(n) if 0 < abs(i - j) <= max_hops]
+        if d:
+            want[i] = len(d) / sum(d) * len(d) / (n - 1)
+    e = edges_df(spark, [(i, i + 1) for i in range(n - 1)])
+    got = dict(rows(closeness_centrality(e, max_hops=max_hops)))
+    assert set(got) == set(want)
+    for v in want:
+        assert abs(got[v] - want[v]) < 1e-9, (v, got[v], want[v])
+
+
 def test_betweenness_path_graph(spark):
     from grafeo_spark.algorithms import betweenness_centrality
 
@@ -294,22 +314,32 @@ def _brandes_oracle(pairs, directed, normalized):
     return bc
 
 
-@pytest.mark.parametrize("directed,normalized", [
-    (False, True), (False, False), (True, True), (True, False),
+@pytest.mark.parametrize("directed,normalized,graph", [
+    pytest.param(False, True, "random", id="False-True"),
+    pytest.param(False, False, "random", id="False-False"),
+    pytest.param(True, True, "random", id="True-True"),
+    pytest.param(True, False, "random", id="True-False"),
+    pytest.param(False, True, "path12", id="path12-undirected"),
+    pytest.param(True, True, "path12", id="path12-directed"),
 ])
-def test_betweenness_matches_brandes_oracle(spark, directed, normalized):
+def test_betweenness_matches_brandes_oracle(spark, directed, normalized, graph):
     """Distributed multi-source Brandes vs the sequential textbook oracle
-    on a seeded random graph with parallel shortest paths (sigma > 1)."""
+    on a seeded random graph with parallel shortest paths (sigma > 1), and
+    on a 12-vertex path whose 11 BFS levels cross several seen-set
+    re-partitions."""
     import random
 
     from grafeo_spark.algorithms import betweenness_centrality
 
-    rng = random.Random(1407)
-    n = 14
-    pairs = sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(40)
-                    if True} - {(i, i) for i in range(n)})
-    # a diamond guarantees sigma=2 paths exist
-    pairs += [(100, 101), (100, 102), (101, 103), (102, 103)]
+    if graph == "path12":
+        pairs = [(i, i + 1) for i in range(11)]
+    else:
+        rng = random.Random(1407)
+        n = 14
+        pairs = sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(40)
+                        if True} - {(i, i) for i in range(n)})
+        # a diamond guarantees sigma=2 paths exist
+        pairs += [(100, 101), (100, 102), (101, 103), (102, 103)]
     want = _brandes_oracle(pairs, directed, normalized)
     got = dict(rows(betweenness_centrality(
         edges_df(spark, pairs), normalized=normalized, directed=directed)))
@@ -376,6 +406,19 @@ def test_bfs_depths(spark):
     e = edges_df(spark, [(1, 2), (2, 3), (1, 3), (3, 4)])
     out = {(r[0], r[1]): r[2] for r in rows(bfs(e, [1]))}
     assert out == {(1, 1): 0, (1, 2): 1, (1, 3): 1, (1, 4): 2}
+
+
+@pytest.mark.parametrize("max_depth,deepest", [
+    (20, 10),  # ends on an empty frontier after 3 seen-set re-partitions
+    (6, 6),  # the depth cap stops the walk first
+    (0, 0),  # depth 0 is the source itself (traversal.rs layers)
+])
+def test_bfs_chain_depths(spark, max_depth, deepest):
+    from grafeo_spark.algorithms import bfs
+
+    e = edges_df(spark, [(i, i + 1) for i in range(10)])
+    got = rows(bfs(e, [0], max_depth=max_depth))
+    assert got == [(0, i, i) for i in range(deepest + 1)]
 
 
 def test_shortest_paths_weighted(spark):
@@ -592,7 +635,7 @@ def test_iter_width_scoping_restores_on_failure(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     with pytest.raises(RuntimeError):
-        with scoped_shuffle_width(spark, 4):
+        with scoped_shuffle_width(spark, 4, rows=0):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
             assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
             raise RuntimeError("boom")
@@ -859,6 +902,39 @@ def _counting(update):
         return update(j)
 
     return wrapped, calls
+
+
+@pytest.mark.parametrize("max_levels,levels,repartitions", [
+    (3, 3, 0),  # capped on a re-partition level: nothing reads the seen set again
+    (4, 4, 1),
+    (20, 10, 3),  # after levels 3, 6 and 9; level 11 comes back empty
+])
+def test_frontier_levels_repartitions_seen_set_between_levels(
+    spark, monkeypatch, max_levels, levels, repartitions
+):
+    from pyspark.sql import functions as F
+
+    from grafeo_spark.algorithms.pregel import frontier_levels
+
+    e = edges_df(spark, [(i, i + 1) for i in range(10)])
+    seed = e.filter(F.col("src") == 0).select(
+        F.col("src").alias("origin"), F.col("dst").alias("cur")
+    )
+
+    def step(f):
+        return f.join(e, f["cur"] == e["src"]).select("origin", F.col("dst").alias("cur"))
+
+    calls = []
+    cls = type(seed)
+    orig = cls.repartition
+    monkeypatch.setattr(
+        cls, "repartition", lambda self, *a, **k: calls.append(a) or orig(self, *a, **k)
+    )
+    got, seen_rows = frontier_levels(seed, step, ["origin", "cur"], max_levels, 10)
+    monkeypatch.undo()
+    assert [rows(lv) for lv in got] == [[(0, i)] for i in range(1, levels + 1)]
+    assert seen_rows == levels
+    assert len(calls) == repartitions
 
 
 def test_pregel_send_to_src_flows_against_edges(spark):

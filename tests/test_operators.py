@@ -63,6 +63,28 @@ def test_reachable_pairs_dedup(spark):
     assert out.count((1, 4, 2)) == 1 and (1, 4, 3) not in out
 
 
+def test_lazy_reachable_pairs_build_runs_no_jobs(spark):
+    """The query-compile path runs no level loop: building the plans
+    counts nothing and checkpoints nothing eagerly. AQE is off for the
+    build because an AQE plan runs its shuffle stages as soon as a lazy
+    ``localCheckpoint`` is taken (hop 3 here), which is not a level job."""
+    from grafeo_spark.operators.expand import reachable_pairs, shortest_path_lengths
+
+    e = _edges(spark, [(i, i + 1) for i in range(10)])
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("lazy-reachable-build", "lazy reachable_pairs build")
+    try:
+        reachable_pairs(e, 1, 5)
+        shortest_path_lengths(e, 5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert sc.statusTracker().getJobIdsForGroup("lazy-reachable-build") == []
+
+
 def test_shortest_path_lengths(spark):
     from grafeo_spark.operators.expand import shortest_path_lengths
 

@@ -318,6 +318,25 @@ def test_path_plus(sdb):
     ]
 
 
+def test_path_plus_long_chain(spark):
+    """ex:next+ over a 10-edge chain: every level of the closure BFS runs
+    (bound subject and all pairs), ending on an empty frontier."""
+    from grafeo_spark.engine import GrafeoSpark
+    from grafeo_spark.graph import TripleStore
+
+    data = [(f"{EX}n{i}", EX + "next", f"{EX}n{i + 1}", None, None, None)
+            for i in range(10)]
+    db = GrafeoSpark(spark, graph=None, triples=TripleStore(spark.createDataFrame(
+        data, "s string, p string, o_iri string, o_lit string, o_dt string, g string"
+    )))
+    out = rows(db.sparql(PFX + "SELECT ?x WHERE { ex:n0 ex:next+ ?x }"))
+    assert out == sorted((f"{EX}n{i}",) for i in range(1, 11))
+    pairs = rows(db.sparql(PFX + "SELECT ?x ?y WHERE { ?x ex:next+ ?y }"))
+    assert pairs == sorted(
+        (f"{EX}n{i}", f"{EX}n{j}") for i in range(11) for j in range(i + 1, 11)
+    )
+
+
 def test_path_alternative(sdb):
     # ex:knows|ex:livesIn from alice: bob (knows) + city1 (livesIn)
     out = rows(sdb.sparql(PFX + "SELECT ?x WHERE { ex:alice ex:knows|ex:livesIn ?x }"))
