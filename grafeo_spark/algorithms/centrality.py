@@ -27,8 +27,6 @@ from grafeo_spark.algorithms.pregel import (
     vertices_from_edges,
 )
 
-DRIVER_ALGO_MAX_NODES = 100_000
-
 
 def degree_centrality(edges: DataFrame, direction: str = "both") -> DataFrame:
     """(id, degree) — one partial-aggregated shuffle (centrality.rs:489)."""

@@ -14,14 +14,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grafeo_spark.algorithms.pregel import (
+    DRIVER_ALGO_MAX_NODES,
     fixpoint,
     iter_width,
     loop_edges,
     undirect,
     vertices_from_edges,
 )
-
-DRIVER_ALGO_MAX_NODES = 100_000
 
 
 def label_propagation(edges: DataFrame, max_iter: int = 10) -> DataFrame:

@@ -4,7 +4,8 @@ Reference: crates/grafeo-adapters/src/plugins/algorithms/components.rs
 (UnionFind :23, connected_components :361, scc :389, topological_sort :417).
 The union-find becomes min-label propagation (hash-to-min) on the Pregel
 kernel; SCC uses the forward-max-coloring + backward-reachability scheme;
-toposort is iterative in-degree peeling (Kahn) — all pure DataFrame loops.
+toposort is Kahn's in-degree peeling, one level per superstep of
+``pregel.peel_degrees`` — all pure DataFrame loops.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from grafeo_spark.algorithms.pregel import (
     full_width,
     iter_width,
     loop_edges,
+    peel_degrees,
     scoped_shuffle_width,
     undirect,
     vertices_from_edges,
@@ -33,9 +35,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     O(log diameter) supersteps on chain shapes instead of O(diameter);
     undirected semantics via both edge orientations."""
     und = undirect(edges.select("src", "dst"))
-    out = _min_label_fixpoint(
-        und, vertices_from_edges(edges), max_iter=max_iter, jump=True
-    )
+    out = _min_label_fixpoint(und, vertices_from_edges(edges), max_iter=max_iter)
     return out.select("id", F.col("color").alias("component"))
 
 
@@ -98,20 +98,12 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
             if not reverse
             else sub_e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        # edges_restricted: sub_e is always confined to verts here — the
-        # initial frame's vertex set IS vertices_from_edges(e), and every
-        # _shrink output is semi-joined to the surviving verts on both
-        # endpoints — so the peel skips the two identity semi-joins the
-        # general entry point pays (r15: two joins inside the pregel edge
-        # materialization per peel round, for nothing)
-        colors = connected_min_color_forward(
-            fwd, verts, max_iter=depth, edges_restricted=True, jump=True,
-            edge_rows=_scc_rows,
-        )
+        # sub_e's endpoints all lie in verts (vertices_from_edges(e) at
+        # first, then _shrink semi-joins both ends), so no restriction
+        colors = _min_label_fixpoint(fwd, verts, max_iter=depth, edge_rows=_scc_rows)
         rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        back = connected_min_color_forward(
-            _same_color_edges(rev, colors), verts, max_iter=depth,
-            edges_restricted=True, jump=True, edge_rows=_scc_rows,
+        back = _min_label_fixpoint(
+            _same_color_edges(rev, colors), verts, max_iter=depth, edge_rows=_scc_rows
         ).withColumnRenamed("color", "_back")
         # lazy: both consumers (the assigned union and _shrink's anti/semi
         # joins) share ONE materialization, fired by the round's n_after
@@ -195,41 +187,10 @@ def _same_color_edges(edges: DataFrame, colors: DataFrame) -> DataFrame:
     )
 
 
-def connected_min_color_forward(
-    edges: DataFrame,
-    vertices: DataFrame,
-    max_iter: int = 50,
-    edges_restricted: bool = False,
-    jump: bool = False,
-    edge_rows: int | None = None,
-) -> DataFrame:
-    """Propagate min id along edge direction within the given vertex set.
-
-    ``edges_restricted=True`` declares both edge endpoints already confined
-    to ``vertices`` (the SCC peel loop's invariant), skipping the two
-    restriction semi-joins — on an already-checkpointed edge frame they are
-    identity operations that would still cost two joins inside the pregel
-    edge materialization per call (r15).
-
-    ``jump=True`` enables pointer jumping after ``pregel.JUMP_AFTER``
-    supersteps; ``edge_rows`` skips the sizing count (see
-    :func:`_min_label_fixpoint`)."""
-    sub = (
-        edges
-        if edges_restricted
-        else edges.join(vertices.withColumnRenamed("id", "src"), "src", "left_semi")
-        .join(vertices.withColumnRenamed("id", "dst"), "dst", "left_semi")
-    )
-    return _min_label_fixpoint(
-        sub, vertices, max_iter=max_iter, jump=jump, edge_rows=edge_rows
-    )
-
-
 def _min_label_fixpoint(
     edges: DataFrame,
     vertices: DataFrame,
     max_iter: int,
-    jump: bool = True,
     edge_rows: int | None = None,
 ) -> DataFrame:
     """(id, color) — color = min id over vertices that reach v along edge
@@ -248,7 +209,7 @@ def _min_label_fixpoint(
       (the kernel paid a second exchange + left join). The old color rides
       along as min(color) over the state row alone, so the _changed flag
       needs no comparison join.
-    - ``jump=True`` adds POINTER-JUMP messages (recursive doubling) from
+    - POINTER-JUMP messages (recursive doubling) from
       superstep JUMP_AFTER on: color(color(v)) reaches v by transitivity,
       so the fixpoint is unchanged but a label crosses distance 2^k per
       superstep — O(JUMP_AFTER + log d) supersteps on chain/cycle shapes
@@ -270,7 +231,7 @@ def _min_label_fixpoint(
 
     def step(state: DataFrame, it: int) -> tuple[DataFrame, bool]:
         state = state.drop("_changed")
-        use_jump = jump and it > JUMP_AFTER
+        use_jump = it > JUMP_AFTER
         msgs = (
             e.join(
                 state.hint("shuffle_hash"), F.col("_es") == F.col("id")
@@ -331,74 +292,17 @@ def topological_sort(edges: DataFrame, max_iter: int = 200) -> DataFrame:
     id. Raises on cycles (matching the reference's error behavior).
 
     Round bound: inherently O(longest-path depth) Spark jobs — Kahn peels
-    one level per round, and that IS the right distributed algorithm (the
-    levels are the parallel schedule a consumer wants anyway). A deep
-    chain therefore costs O(n) rounds of cheap jobs; ``max_iter`` caps it
-    and exhaustion raises. tests/test_algorithms.py pins a 300-deep chain
-    inside a wall budget.
+    one level per ``peel_degrees`` superstep, and that IS the right
+    distributed algorithm (the levels are the parallel schedule a consumer
+    wants anyway). A deep chain therefore costs O(n) supersteps of cheap
+    jobs; ``max_iter`` caps the levels and exhaustion raises.
+    tests/test_algorithms.py pins a 300-deep chain inside a wall budget.
     """
-    # lazy: the state count below materializes the edge set and the
-    # in-degree state in ONE job (r15 fusion)
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    spark = e.sparkSession
-    # Kahn via MAINTAINED in-degrees: state is (id, indeg); each round
-    # peels indeg=0, then decrements successors by the count of edges
-    # LEAVING the peeled frontier. The old loop instead re-derived
-    # has_in = distinct(dst) over the full remaining edge set and
-    # anti-joined/checkpointed BOTH the vertex and edge frames every
-    # round — O(E) shuffled+rewritten per level; the decrement join
-    # touches each edge exactly once across the whole run (guide §2.4:
-    # remove per-round shuffles outright).
-    state = (
-        vertices_from_edges(e)
-        .join(
-            e.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("indeg")),
-            "id",
-            "left",
-        )
-        .fillna({"indeg": 0})
-        .localCheckpoint(eager=False)
+    state, converged = peel_degrees(
+        edges.select("src", "dst").distinct(), F.col("deg") == 0, max_iter
     )
-    n_remaining = state.count()
-    out = spark.createDataFrame([], "id long, level long")
-    level = 0
-    # per-level shuffles sized to the measured state (pregel.py sizing rule)
-    with scoped_shuffle_width(spark, full_width(n_remaining, spark), rows=n_remaining):
-        while n_remaining > 0:
-            if level >= max_iter:
-                raise ValueError("topological_sort: max_iter exceeded")
-            sources = (
-                state.filter(F.col("indeg") == 0)
-                .select("id")
-                .localCheckpoint(eager=False)  # materialized by the count
-            )
-            n_src = sources.count()
-            if n_src == 0:
-                raise ValueError("topological_sort: graph has a cycle")
-            out = out.unionByName(sources.withColumn("level", F.lit(level).cast("long")))
-            # no broadcast hint: a wide DAG's first frontier can be most of
-            # the graph — AQE sees the checkpointed frontier's true size and
-            # picks broadcast itself exactly when it fits
-            dec = (
-                e.join(sources.withColumnRenamed("id", "src"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.count("*").alias("_d"))
-            )
-            state = (
-                state.filter(F.col("indeg") > 0)
-                .join(dec, "id", "left")
-                .select(
-                    "id",
-                    (F.col("indeg") - F.coalesce(F.col("_d"), F.lit(0))).alias("indeg"),
-                )
-                # EAGER, deliberately (r15 measured): a lazy state here
-                # stacks UNDER the lazy sources checkpoint, and Spark's
-                # doCheckpoint only finalizes the FIRST marked RDD on the
-                # path from an action — state's lineage then never
-                # truncates and a 300-level chain overflows the task
-                # serializer (test_topological_sort_deep_chain pins it).
-                .localCheckpoint(eager=True)
-            )
-            n_remaining -= n_src
-            level += 1
-    return out
+    if not converged:
+        raise ValueError(f"topological_sort: max_iter={max_iter} exceeded")
+    if not state.filter(F.col("level").isNull()).isEmpty():
+        raise ValueError("topological_sort: graph has a cycle")
+    return state.select("id", "level")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from grafeo_spark.algorithms.components import connected_components
 from grafeo_spark.algorithms.pregel import (
+    _ckpt_strip_stats,
     full_width,
     scoped_shuffle_width,
     vertices_from_edges,
@@ -101,11 +102,14 @@ def minimum_spanning_forest(
             F.col("id").alias("component"), F.col("component").alias("_newc")
         )
         # LAZY + fused with the next round's best.count() (which scans the
-        # cross join referencing comp) — the r15 checkpoint/count pattern
-        comp = (
-            comp.join(merge, "component", "left")
-            .select("id", F.coalesce(F.col("_newc"), F.col("component")).alias("component"))
-            .localCheckpoint(eager=False)
+        # cross join referencing comp) — the r15 checkpoint/count pattern.
+        # The merge join's plan reads comp itself, so a plain checkpoint
+        # would multiply the size estimate every round; strip it.
+        comp = _ckpt_strip_stats(
+            comp.join(merge, "component", "left").select(
+                "id", F.coalesce(F.col("_newc"), F.col("component")).alias("component")
+            ),
+            False,
         )
     return mst
 

@@ -18,9 +18,12 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from grafeo_spark.algorithms.pregel import _pregel, undirect, vertices_from_edges
-
-DRIVER_ALGO_MAX_NODES = 100_000
+from grafeo_spark.algorithms.pregel import (
+    DRIVER_ALGO_MAX_NODES,
+    _pregel,
+    undirect,
+    vertices_from_edges,
+)
 
 
 def _source_df(edges: DataFrame, sources) -> DataFrame:

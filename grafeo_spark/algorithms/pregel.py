@@ -32,6 +32,11 @@ The loop machinery around that join exists once, here:
   ``SEEN_REPARTITION_EVERY`` levels at a width sized to the seen rows.
   BFS, closeness, SPARQL closures (``operators.expand.bfs_pairs``) and
   betweenness's forward pass run on it.
+- ``peel_degrees`` is the degree-peeling step on ``fixpoint``: state
+  ``(id, deg, level)``, where each superstep peels the vertices whose
+  degree satisfies the caller's condition and sends ``-1`` along their
+  edges, state rows and messages meeting in one ``groupBy(id)``. k-core
+  and topological sort run on it.
 - ``pregel`` is the generic step on top of ``fixpoint``: message join,
   one aggregate per target, and a left-outer update.
 
@@ -91,7 +96,7 @@ DISK_ONLY_ROWS = 150_000_000
 # width must not drop below the available parallelism.
 SMALL_ROWS = 100_000
 
-# Pointer jumping (``jump=True``) starts at this superstep, not at 1: the
+# Pointer jumping starts at this superstep, not at 1: the
 # jump self-join adds two state joins + a union to every superstep (~2-4x
 # the superstep constant on a tiny graph, measured on the sf0.1 SCC
 # battery graph whose colorings converge in <= 5 supersteps), while its
@@ -112,6 +117,10 @@ JUMP_AFTER = 6
 # handling is exactly what the decade runs needed. Size-derived, never a
 # core-count constant.
 AQE_OFF_ROWS = 4 * ROWS_PER_TASK
+
+# Default size guard of the driver-side algorithms (Louvain, DFS, A*,
+# articulation points, bridges): past it they raise before collecting.
+DRIVER_ALGO_MAX_NODES = 100_000
 
 
 def iter_width(rows: int, spark=None) -> int:
@@ -359,6 +368,78 @@ def fixpoint(
         state = nxt
         collect_garbage(rows)
     return state.drop("_changed"), False
+
+
+def peel_degrees(
+    edges: DataFrame, peelable: Column, max_iter: int
+) -> tuple[DataFrame, bool]:
+    """Degree peeling over the directed ``edges`` (src, dst); return the
+    state ``(id, deg, level)`` of every endpoint and whether the peel
+    settled within ``max_iter`` peel rounds.
+
+    ``deg`` starts as each vertex's in-degree along ``edges``. Superstep
+    ``it`` peels every unpeeled vertex whose ``deg`` satisfies
+    ``peelable`` (a condition on ``F.col("deg")``), setting its ``level``
+    to ``it - 1``; each peeled vertex sends ``-1`` to its targets. Vertices
+    never peeled keep a null ``level``. k-core peels ``deg < k`` over both
+    orientations of each edge; Kahn's topological sort peels ``deg == 0``.
+
+    Each superstep is the ``_min_label_fixpoint`` shape on ``fixpoint``:
+    the peeled rows join the co-partitioned ``loop_edges`` cache, and the
+    state rows and the messages meet in one ``groupBy(id)``, one exchange
+    and one job. The loop converges on the first superstep that peels
+    nothing, so ``max_iter`` rounds take ``max_iter + 1`` supersteps.
+
+    Init is one action: the vertex set and in-degrees come from one
+    aggregate (every edge contributes ``(src, 0)`` and ``(dst, 1)``), and
+    its ``sum(deg)`` (the edge rows that size the loop) materializes both
+    lazy checkpoints, the edges' and the state's."""
+    cached = edges.select(
+        F.col("src").alias("_es"), F.col("dst").alias("_ed")
+    ).localCheckpoint(eager=False)
+    state = (
+        cached.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("_es").alias("id"), F.lit(0).alias("d")),
+                    F.struct(F.col("_ed").alias("id"), F.lit(1).alias("d")),
+                )
+            ).alias("x")
+        )
+        .groupBy(F.col("x.id").alias("id"))
+        .agg(F.sum("x.d").alias("deg"))
+        .localCheckpoint(eager=False)
+    )
+    ne = int(state.agg(F.sum("deg")).first()[0] or 0)
+    state = state.withColumn("level", F.lit(None).cast("long"))
+
+    def step(state: DataFrame, it: int) -> tuple[DataFrame, bool]:
+        peel = F.col("level").isNull() & peelable
+        cur = state.select(
+            "id",
+            "deg",
+            F.when(peel, F.lit(it - 1).cast("long"))
+            .otherwise(F.col("level"))
+            .alias("level"),
+            peel.alias("_p"),
+        )
+        peeled = cur.filter(F.col("_p")).hint("shuffle_hash")
+        msgs = e.join(peeled, F.col("_es") == F.col("id")).select(
+            F.col("_ed").alias("id"), F.lit(-1).cast("long").alias("deg")
+        )
+        nxt = (
+            cur.unionByName(msgs, allowMissingColumns=True)
+            .groupBy("id")
+            .agg(
+                F.sum("deg").alias("deg"),
+                F.max("level").alias("level"),
+                F.max("_p").alias("_changed"),
+            )
+        )
+        return nxt, False
+
+    with loop_edges(cached, "_es", ne, iter_width) as (e, _):
+        return fixpoint(state, step, max_iter + 1, ne)
 
 
 def frontier_levels(

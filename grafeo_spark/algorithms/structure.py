@@ -2,9 +2,10 @@
 
 Reference: crates/grafeo-adapters/src/plugins/algorithms/structure.rs
 (articulation_points :392, bridges :428, k_core :473). k-core is the
-classic iterative degree-filter loop — naturally distributed. Articulation
-points and bridges use Tarjan/Hopcroft lowpoint DFS, which is sequential;
-they run driver-side behind a size guard (the reference is in-memory too).
+classic iterative degree peel — naturally distributed, one peel round per
+superstep of ``pregel.peel_degrees``. Articulation points and bridges use
+Tarjan/Hopcroft lowpoint DFS, which is sequential; they run driver-side
+behind a size guard (the reference is in-memory too).
 """
 
 from __future__ import annotations
@@ -13,48 +14,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grafeo_spark.algorithms.pregel import (
+    DRIVER_ALGO_MAX_NODES,
     canonical_undirected,
-    full_width,
-    scoped_shuffle_width,
+    peel_degrees,
     undirect,
 )
 
-DRIVER_ALGO_MAX_NODES = 100_000
-
 
 def k_core(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
-    """(id) vertices of the k-core (structure.rs:473): iteratively strip
-    vertices with degree < k until fixpoint. Each round: one degree
-    aggregation + two semi-joins; eager checkpoints bound lineage."""
-    # lazy: the count is the materializing action (r15 fusion)
-    e = canonical_undirected(edges).localCheckpoint(eager=False)
-    n_e = e.count()
-    # loop shuffles sized to the measured edge count (pregel.py rule);
-    # the fixpoint test reuses the previous round's count instead of
-    # re-counting the unchanged checkpointed frame (one job per round
-    # saved — the ADVICE-r13 SCC pattern)
-    with scoped_shuffle_width(
-        e.sparkSession, full_width(n_e * 2, e.sparkSession), rows=n_e * 2
-    ):
-        for _ in range(max_iter):
-            und = undirect(e)
-            deg = und.groupBy("src").agg(F.count("*").alias("deg"))
-            keep = deg.filter(F.col("deg") >= k).select(F.col("src").alias("id"))
-            nxt = (
-                e.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                .localCheckpoint(eager=False)  # materialized by the count
-            )
-            n_nxt = nxt.count()
-            e = nxt
-            if n_nxt == n_e:
-                break
-            n_e = n_nxt
-    return (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
+    """(id) vertices of the k-core (structure.rs:473): peel every vertex
+    of degree < k until none is left, one peel round per ``peel_degrees``
+    superstep over both orientations of each undirected edge. Raises
+    ``ValueError`` if the peel has not settled after ``max_iter``
+    rounds."""
+    state, converged = peel_degrees(
+        undirect(canonical_undirected(edges)), F.col("deg") < k, max_iter
     )
+    if not converged:
+        raise ValueError(
+            f"k_core: peeling did not settle within max_iter={max_iter} "
+            "rounds; raise max_iter"
+        )
+    return state.filter(F.col("level").isNull()).select("id")
 
 
 def core_number(edges: DataFrame, max_k: int = 100) -> DataFrame:

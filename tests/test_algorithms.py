@@ -153,6 +153,56 @@ def test_topological_sort_deep_chain_within_budget(spark):
         topological_sort(e, max_iter=10)
 
 
+def _jobs_run_by(spark, group, fn):
+    """Run ``fn()`` under a job group and return (its result, the number of
+    Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_topological_sort_matches_networkx_generations(spark):
+    """Kahn levels on a seeded random DAG equal networkx's topological
+    generations (level = longest-path depth from a source)."""
+    import random
+
+    import networkx as nx
+
+    from grafeo_spark.algorithms import topological_sort
+
+    rng = random.Random(11)
+    n = 40
+    label = list(range(100, 100 + n))
+    rng.shuffle(label)  # ids not in topological order
+    pairs = {tuple(sorted(rng.sample(range(n), 2))) for _ in range(90)}
+    edges = [(label[u], label[v]) for u, v in sorted(pairs)]
+    g = nx.DiGraph(edges)
+    want = {
+        v: lvl for lvl, gen in enumerate(nx.topological_generations(g)) for v in gen
+    }
+    assert len(set(want.values())) > 3
+    assert dict(rows(topological_sort(edges_df(spark, edges)))) == want
+
+
+def test_topological_sort_job_count_tracks_depth(spark):
+    """Each Kahn level costs one superstep job: a 20-deep chain runs at
+    most depth + 8 jobs in total, init and result included."""
+    from grafeo_spark.algorithms import topological_sort
+
+    depth = 20
+    e = edges_df(spark, [(i, i + 1) for i in range(depth - 1)])
+    out, jobs = _jobs_run_by(
+        spark, "toposort-chain-jobs", lambda: dict(rows(topological_sort(e)))
+    )
+    assert out == {i: i for i in range(depth)}
+    assert jobs <= depth + 8, jobs
+
+
 # --------------------------------------------------------------------- #
 # centrality
 # --------------------------------------------------------------------- #
@@ -544,6 +594,62 @@ def test_core_number(spark):
     assert out == {1: 2, 2: 2, 3: 2, 4: 1}
 
 
+def _random_graph(n, m, seed):
+    import random
+
+    rng = random.Random(seed)
+    pairs: set = set()
+    while len(pairs) < m:
+        u, v = rng.sample(range(n), 2)
+        pairs.add((u, v))
+    return sorted(pairs)
+
+
+@pytest.mark.parametrize("k", [2, 3, 4])
+def test_k_core_matches_networkx(spark, k):
+    import networkx as nx
+
+    from grafeo_spark.algorithms import k_core
+
+    edges = _random_graph(60, 150, seed=0)
+    want = sorted(nx.k_core(nx.Graph(edges), k).nodes)
+    assert want  # the seeded graph has a non-empty k-core for every k here
+    assert sorted(r[0] for r in rows(k_core(edges_df(spark, edges), k))) == want
+
+
+def test_k_core_cascade(spark):
+    """A 4-clique with a 5-vertex pendant path: the path peels one vertex
+    per round from its free end, five rounds before the 2-core settles."""
+    import networkx as nx
+
+    from grafeo_spark.algorithms import k_core
+
+    clique = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    path = [(4, 5), (5, 6), (6, 7), (7, 8), (8, 9)]
+    e = edges_df(spark, clique + path)
+    for k in (2, 3):
+        want = sorted(nx.k_core(nx.Graph(clique + path), k).nodes)
+        assert want == [1, 2, 3, 4]
+        assert sorted(r[0] for r in rows(k_core(e, k))) == want
+
+
+@pytest.mark.parametrize("n,short,enough", [
+    (12, 5, 6),
+    # ~230 supersteps: the default max_iter=100 case
+    pytest.param(250, None, 200, marks=pytest.mark.slow),
+])
+def test_k_core_exhaustion_raises(spark, n, short, enough):
+    """An n-vertex path peels two vertices per round, so its empty 2-core
+    needs n/2 rounds: a shorter max_iter (at n=250, the default 100)
+    raises instead of returning the vertices left in the middle."""
+    from grafeo_spark.algorithms import k_core
+
+    e = edges_df(spark, [(i, i + 1) for i in range(n - 1)])
+    with pytest.raises(ValueError, match="max_iter"):
+        k_core(e, 2) if short is None else k_core(e, 2, max_iter=short)
+    assert rows(k_core(e, 2, max_iter=enough)) == []
+
+
 def test_articulation_and_bridges(spark):
     from grafeo_spark.algorithms import articulation_points, find_bridges
 
@@ -623,6 +729,38 @@ def test_mst_multi_round_contraction(spark):
     assert mst == {
         (1, 2): 1.0, (2, 3): 1.1, (11, 12): 1.2, (12, 13): 1.3, (3, 11): 9.0
     }
+
+
+def test_mst_component_state_keeps_default_size_estimate(spark, monkeypatch):
+    """Every Borůvka round checkpoints the component labels through
+    ``_ckpt_strip_stats``, so each round's component state reports the
+    session default size estimate. A plain checkpoint inherits the merge
+    join's estimate, which multiplies every round (its digit count went
+    20 -> 137 -> 726 -> 3668 -> 18377 over rounds 0-4 on a 256-vertex
+    path) until planning the round dominates it."""
+    import importlib
+
+    mst_mod = importlib.import_module("grafeo_spark.algorithms.mst")
+    from grafeo_spark.algorithms import minimum_spanning_forest
+
+    # weight = trailing zeros of (i + 1): every round merges components
+    # pairwise, so a 32-vertex path takes 5 merge rounds
+    n = 32
+    path = [(i, i + 1, float(((i + 1) & -(i + 1)).bit_length() - 1)) for i in range(n - 1)]
+    default = int(spark._jsparkSession.sessionState().conf().defaultSizeInBytes())
+    sizes = []
+    real = mst_mod._ckpt_strip_stats
+
+    def spy(frame, eager):
+        out = real(frame, eager)
+        sizes.append(_size_in_bytes(out))
+        return out
+
+    monkeypatch.setattr(mst_mod, "_ckpt_strip_stats", spy)
+    e = edges_df(spark, path, "src long, dst long, weight double")
+    forest = rows(minimum_spanning_forest(e))
+    assert sorted(forest) == sorted(path)
+    assert sizes == [default] * 5
 
 
 def test_iter_width_scoping_restores_on_failure(spark):
