@@ -17,7 +17,9 @@ from pyspark.sql import functions as F
 
 from grafeo_spark.algorithms.pregel import (
     DISK_ONLY_ROWS,
+    aqe_off,
     collect_garbage,
+    endpoint_degrees,
     frontier_levels,
     full_width,
     iter_width,
@@ -74,33 +76,23 @@ def pagerank(
             .fillna({"outdeg": 0})
         )
     else:
-        # vertex set + out-degree in ONE shuffle: every edge contributes
-        # (src, 1) and (dst, 0), so the grouped sum is the out-degree and
-        # the key set is exactly the endpoint union
-        state = (
-            edges.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("src").alias("id"), F.lit(1).alias("d")),
-                        F.struct(F.col("dst").alias("id"), F.lit(0).alias("d")),
-                    )
-                ).alias("x")
-            )
-            .select("x.id", "x.d")
-            .groupBy("id")
-            .agg(F.sum("d").alias("outdeg"))
+        # vertex set + out-degree in ONE shuffle
+        state = endpoint_degrees(edges, "src", "dst", out=True).withColumnRenamed(
+            "deg", "outdeg"
         )
-    # ONE init job (r15 fusion): the lazy checkpoint materializes under a
-    # single aggregate that reads off n, the edge count (sum of out-degrees
-    # — no extra edge scan) and the dangling-vertex count together. The old
-    # init paid 5 jobs for the same facts (two eager checkpoints, a count,
-    # an edge-sum aggregate, a dangling-mass aggregate).
-    state = state.localCheckpoint(eager=False)
-    _init = state.agg(
-        F.count(F.lit(1)),
-        F.sum("outdeg"),
-        F.sum(F.when(F.col("outdeg") == 0, 1).otherwise(0)),
-    ).first()
+    # ONE init job (r15 fusion), planned under aqe_off: the lazy checkpoint
+    # materializes under a single aggregate that reads off n, the edge
+    # count (sum of out-degrees — no extra edge scan) and the dangling-
+    # vertex count together. The old init paid 5 jobs for the same facts
+    # (two eager checkpoints, a count, an edge-sum aggregate, a dangling-
+    # mass aggregate).
+    with aqe_off(edges.sparkSession):
+        state = state.localCheckpoint(eager=False)
+        _init = state.agg(
+            F.count(F.lit(1)),
+            F.sum("outdeg"),
+            F.sum(F.when(F.col("outdeg") == 0, 1).otherwise(0)),
+        ).first()
     n = int(_init[0])
     if n == 0:
         return state.select("id", F.lit(0.0).alias("pagerank"))

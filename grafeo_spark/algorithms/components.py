@@ -3,9 +3,12 @@
 Reference: crates/grafeo-adapters/src/plugins/algorithms/components.rs
 (UnionFind :23, connected_components :361, scc :389, topological_sort :417).
 The union-find becomes min-label propagation (hash-to-min) on the Pregel
-kernel; SCC uses the forward-max-coloring + backward-reachability scheme;
-toposort is Kahn's in-degree peeling, one level per superstep of
-``pregel.peel_degrees`` — all pure DataFrame loops.
+kernel; SCC peels whole components with forward min-coloring plus
+same-color backward coloring, and finishes the remainder with an
+iterative Tarjan on the driver once it has at most
+``DRIVER_ALGO_MAX_NODES`` vertices and edges (round 1 included, so a
+small graph never colors at all); toposort is Kahn's in-degree peeling,
+one level per superstep of ``pregel.peel_degrees``.
 """
 
 from __future__ import annotations
@@ -14,7 +17,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grafeo_spark.algorithms.pregel import (
+    DRIVER_ALGO_MAX_NODES,
     JUMP_AFTER,
+    aqe_off,
+    endpoint_degrees,
     fixpoint,
     full_width,
     iter_width,
@@ -57,6 +63,16 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
     it unconditionally, costing +37% wall on normal graphs for a pass
     that cleared almost nothing.
 
+    Local finish (Multistep's serial tail): every outer round, round 1
+    included, starts by checking the remainder. Once it has at most
+    ``DRIVER_ALGO_MAX_NODES`` vertices and at most that many edges, it
+    is collected (vertices whose edges were all peeled included, as
+    singletons) and finished by an iterative Tarjan on the driver, which
+    counts as one round. Every peel removes whole SCCs, so the SCCs of
+    the remainder are SCCs of the input. A graph that fits from the
+    start costs two jobs: the init's checkpoint-plus-count and the
+    collect (the battery's 60-vertex SCC entry went from 51 jobs to 7).
+
     Bounds (the iterative-family contract, same as BFS/WCC): each inner
     fixpoint runs with convergence early exit and POINTER JUMPING
     (recursive doubling, r16 — ``_min_label_fixpoint``): a label crosses
@@ -64,21 +80,37 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
     O(log diameter) supersteps instead of O(diameter); the bound passed
     down stays |V|+1, so even without jumping a long cycle colors
     CORRECTLY rather than truncating (r12 fix: the old hardcoded 50-step
-    cap silently split any SCC with diameter > 50). Worst-case outer
-    rounds remain O(#SCCs) on shapes adversarial to both directions;
-    ``max_iter`` caps them and exhaustion RAISES (never a silent partial
-    result). For singleton-heavy pathological graphs prefer the driver
-    NetworkX bridge at small scale, or raise max_iter deliberately.
+    cap silently split any SCC with diameter > 50). The tail bound: the
+    worst case of O(#SCCs) outer rounds, on shapes adversarial to both
+    directions, is paid only while more than ``DRIVER_ALGO_MAX_NODES``
+    vertices or edges remain; ``max_iter`` caps the rounds and
+    exhaustion RAISES (never a silent partial result).
     """
-    # lazy checkpoints: the depth count below materializes the edge set and
-    # the vertex set in ONE job (r15 fusion — eager paid a job per frame)
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    remaining = vertices_from_edges(e).localCheckpoint(eager=False)
-    spark = e.sparkSession
+    spark = edges.sparkSession
+    # init, planned under aqe_off: the lazy checkpoints are materialized
+    # by ONE job, the aggregate that reads off |V| (the rows of the
+    # endpoint-degree frame) and |E| (its degree sum)
+    with aqe_off(spark):
+        e = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
+        deg = endpoint_degrees(e, "src", "dst", out=True).localCheckpoint(eager=False)
+        sizes = deg.agg(F.count(F.lit(1)), F.sum("deg")).first()
+    remaining = deg.select("id")
     assigned = spark.createDataFrame([], "id long, component long")
-    depth = remaining.count() + 1  # converged-fixpoint bound for inner loops
-    _scc_rows = max(depth - 1, e.count())
+    n_edges = int(sizes[1] or 0)
+    depth = int(sizes[0]) + 1  # converged-fixpoint bound for inner loops
+    _scc_rows = max(depth - 1, n_edges)
     _width = scoped_shuffle_width(spark, full_width(_scc_rows, spark), rows=_scc_rows)
+
+    def _fits_driver(n_verts: int) -> bool:
+        """Whether the remainder of ``n_verts`` vertices finishes locally.
+        ``n_edges`` bounds the remaining edges from above (peels only
+        shrink them), so they are recounted only while it is too big."""
+        nonlocal n_edges
+        if n_verts > DRIVER_ALGO_MAX_NODES:
+            return False
+        if n_edges > DRIVER_ALGO_MAX_NODES:
+            n_edges = e.count()
+        return n_edges <= DRIVER_ALGO_MAX_NODES
 
     def _peel(sub_e: DataFrame, verts: DataFrame, reverse: bool) -> DataFrame:
         """Color along one direction, return the root SCCs (id, component).
@@ -98,8 +130,8 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
             if not reverse
             else sub_e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        # sub_e's endpoints all lie in verts (vertices_from_edges(e) at
-        # first, then _shrink semi-joins both ends), so no restriction
+        # sub_e's endpoints all lie in verts (the endpoint set at first,
+        # then _shrink semi-joins both ends), so no restriction
         colors = _min_label_fixpoint(fwd, verts, max_iter=depth, edge_rows=_scc_rows)
         rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         back = _min_label_fixpoint(
@@ -133,15 +165,15 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
 
     # one count action per shrink: n_after carries into the next round as
     # n_before instead of re-counting the identical frame (ADVICE r13);
-    # the initial value reuses the depth count above (same frame, r15)
+    # the initial value reuses the init count above (same frame, r15)
     n_before = depth - 1
     # outer-loop shuffles (shrink anti-joins, union checkpoints, the
     # backward reachability) share the measured-size width; the inner
     # pregel coloring scopes itself the same way (pregel.py sizing rule)
     with _width:
       for _round in range(max_iter):
-        if n_before == 0:
-            return assigned
+        if _fits_driver(n_before):
+            return assigned.unionByName(_driver_scc(e, remaining))
         scc = _peel(e, remaining, reverse=False)
         # lazy: assigned is only read by the caller's final action (or the
         # exhausted-loop check); each round's checkpoint still computes
@@ -171,9 +203,74 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
             f"strongly_connected_components: {remaining.count()} vertices "
             f"unassigned after {max_iter} peel rounds — the graph's SCC "
             "structure is adversarial to coloring-peel in both directions. "
-            "Raise max_iter, or use the NetworkX bridge for small graphs."
+            "Raise max_iter."
         )
     return assigned
+
+
+def _driver_scc(edges: DataFrame, vertices: DataFrame) -> DataFrame:
+    """(id, component) of a remainder small enough for the driver: ONE
+    collect of its edges and its vertices (a vertex row carries a null
+    ``dst``, so vertices without edges stay in), then ``_tarjan_scc``."""
+    rows = (
+        edges.select("src", "dst")
+        .unionByName(
+            vertices.select(F.col("id").alias("src"), F.lit(None).alias("dst"))
+        )
+        .collect()
+    )
+    adj: dict[int, list[int]] = {}
+    for src, dst in rows:
+        out = adj.setdefault(src, [])
+        if dst is not None:
+            out.append(dst)
+    comp = _tarjan_scc(adj)
+    return edges.sparkSession.createDataFrame(
+        list(comp.items()), "id long, component long"
+    )
+
+
+def _tarjan_scc(adj: dict[int, list[int]]) -> dict[int, int]:
+    """Iterative Tarjan (no recursion, the ``structure._lowpoint_dfs``
+    shape) → {vertex: min member id of its SCC}. ``adj`` has a key for
+    every vertex."""
+    index: dict[int, int] = {}
+    low: dict[int, int] = {}
+    on_stack: set[int] = set()
+    scc_stack: list[int] = []
+    comp: dict[int, int] = {}
+    for root in adj:
+        if root in index:
+            continue
+        stack: list[tuple[int, iter]] = [(root, iter(adj[root]))]
+        index[root] = low[root] = len(index)
+        scc_stack.append(root)
+        on_stack.add(root)
+        while stack:
+            v, it = stack[-1]
+            for w in it:
+                if w not in index:
+                    index[w] = low[w] = len(index)
+                    scc_stack.append(w)
+                    on_stack.add(w)
+                    stack.append((w, iter(adj[w])))
+                    break
+                if w in on_stack:
+                    low[v] = min(low[v], index[w])
+            else:
+                stack.pop()
+                if stack:
+                    p = stack[-1][0]
+                    low[p] = min(low[p], low[v])
+                if low[v] == index[v]:
+                    members = []
+                    while not members or members[-1] != v:
+                        members.append(scc_stack.pop())
+                        on_stack.discard(members[-1])
+                    label = min(members)
+                    for w in members:
+                        comp[w] = label
+    return comp
 
 
 def _same_color_edges(edges: DataFrame, colors: DataFrame) -> DataFrame:

@@ -39,6 +39,10 @@ The loop machinery around that join exists once, here:
   and topological sort run on it.
 - ``pregel`` is the generic step on top of ``fixpoint``: message join,
   one aggregate per target, and a left-outer update.
+- ``aqe_off`` scopes a loop's init (its lazy checkpoints and the sizing
+  action) with AQE off, so the init costs one job; ``endpoint_degrees``
+  is the one-aggregate vertex set with degrees that PageRank,
+  ``peel_degrees`` and SCC size their loops from.
 
 Two rules hold for every loop:
 
@@ -120,6 +124,7 @@ AQE_OFF_ROWS = 4 * ROWS_PER_TASK
 
 # Default size guard of the driver-side algorithms (Louvain, DFS, A*,
 # articulation points, bridges): past it they raise before collecting.
+# SCC finishes on the driver once its remainder's vertices and edges fit.
 DRIVER_ALGO_MAX_NODES = 100_000
 
 
@@ -241,6 +246,22 @@ class scoped_shuffle_width:
         if self._aqe_off and self._prev_aqe == "true":
             self._spark.conf.set("spark.sql.adaptive.enabled", self._prev_aqe)
         return False
+
+
+def aqe_off(spark) -> scoped_shuffle_width:
+    """Scope AQE off at the session's width, for planning a loop's init:
+    its lazy checkpoints and the sizing action that materializes them.
+
+    Under AQE a lazy ``localCheckpoint`` is not lazy: planning it runs
+    every exchange below it as a query stage of its own, one job each,
+    before the action meant to fuse them (the SCC init ran 5 jobs inside
+    ``localCheckpoint`` alone). With AQE off the checkpoint only builds
+    the lineage, and the sizing action computes it in one job. The size
+    is not known yet, so the scope holds at any size; the init's own
+    exchanges (distincts, grouped sums) are not joins, leaving AQE only
+    its coalescing of small shuffle output to give."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    return scoped_shuffle_width(spark, width, rows=0)
 
 
 def _prefixed(df: DataFrame, prefix: str) -> DataFrame:
@@ -390,27 +411,18 @@ def peel_degrees(
     and one job. The loop converges on the first superstep that peels
     nothing, so ``max_iter`` rounds take ``max_iter + 1`` supersteps.
 
-    Init is one action: the vertex set and in-degrees come from one
-    aggregate (every edge contributes ``(src, 0)`` and ``(dst, 1)``), and
-    its ``sum(deg)`` (the edge rows that size the loop) materializes both
-    lazy checkpoints, the edges' and the state's."""
-    cached = edges.select(
-        F.col("src").alias("_es"), F.col("dst").alias("_ed")
-    ).localCheckpoint(eager=False)
-    state = (
-        cached.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("_es").alias("id"), F.lit(0).alias("d")),
-                    F.struct(F.col("_ed").alias("id"), F.lit(1).alias("d")),
-                )
-            ).alias("x")
+    Init is one job, planned under ``aqe_off``: the vertex set and
+    in-degrees come from ``endpoint_degrees``, and its ``sum(deg)`` (the
+    edge rows that size the loop) materializes both lazy checkpoints, the
+    edges' and the state's."""
+    with aqe_off(edges.sparkSession):
+        cached = edges.select(
+            F.col("src").alias("_es"), F.col("dst").alias("_ed")
+        ).localCheckpoint(eager=False)
+        state = endpoint_degrees(cached, "_es", "_ed", out=False).localCheckpoint(
+            eager=False
         )
-        .groupBy(F.col("x.id").alias("id"))
-        .agg(F.sum("x.d").alias("deg"))
-        .localCheckpoint(eager=False)
-    )
-    ne = int(state.agg(F.sum("deg")).first()[0] or 0)
+        ne = int(state.agg(F.sum("deg")).first()[0] or 0)
     state = state.withColumn("level", F.lit(None).cast("long"))
 
     def step(state: DataFrame, it: int) -> tuple[DataFrame, bool]:
@@ -577,6 +589,27 @@ def _pregel(
     key = "e_src" if send_to_dst is not None else "e_dst"
     with loop_edges(_prefixed(edges, "e_"), key, ne, iter_width) as (e, _):
         return fixpoint(vertices, step, max_iter, ne)
+
+
+def endpoint_degrees(edges: DataFrame, src: str, dst: str, out: bool) -> DataFrame:
+    """(id, deg) for every endpoint of ``edges``: its out-degree along
+    ``src`` → ``dst`` when ``out``, else its in-degree. One explode and
+    one grouped sum, with no join: every edge contributes ``(src, 1)`` and
+    ``(dst, 0)`` (the other way round for in-degrees). The rows are the
+    vertex set, and ``sum(deg)`` is the edge count."""
+    s, d = (1, 0) if out else (0, 1)
+    return (
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(src).alias("id"), F.lit(s).alias("d")),
+                    F.struct(F.col(dst).alias("id"), F.lit(d).alias("d")),
+                )
+            ).alias("x")
+        )
+        .groupBy(F.col("x.id").alias("id"))
+        .agg(F.sum("x.d").alias("deg"))
+    )
 
 
 def vertices_from_edges(edges: DataFrame) -> DataFrame:

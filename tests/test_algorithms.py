@@ -28,6 +28,16 @@ def test_connected_components(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+@pytest.fixture
+def coloring_peel(monkeypatch):
+    """Run SCC on the distributed coloring peel only: with a driver bound
+    of 0 no remainder is small enough to finish with Tarjan."""
+    from grafeo_spark.algorithms import components
+
+    monkeypatch.setattr(components, "DRIVER_ALGO_MAX_NODES", 0)
+
+
+@pytest.mark.usefixtures("coloring_peel")
 def test_scc_cycle_and_tail(spark):
     from grafeo_spark.algorithms import strongly_connected_components
 
@@ -37,6 +47,7 @@ def test_scc_cycle_and_tail(spark):
     assert out[4] == 4
 
 
+@pytest.mark.usefixtures("coloring_peel")
 def test_scc_two_cycles(spark):
     from grafeo_spark.algorithms import strongly_connected_components
 
@@ -45,6 +56,7 @@ def test_scc_two_cycles(spark):
     assert out[1] == out[2] and out[3] == out[4] and out[1] != out[3]
 
 
+@pytest.mark.usefixtures("coloring_peel")
 def test_scc_60_cycle_is_one_component(spark):
     """Fast-tier twin of the 120-cycle pin below: a directed cycle longer
     than the r12 bug's hardcoded 50-step cap must still resolve as ONE
@@ -60,6 +72,7 @@ def test_scc_60_cycle_is_one_component(spark):
 
 
 @pytest.mark.slow
+@pytest.mark.usefixtures("coloring_peel")
 def test_scc_long_cycle_is_one_component(spark):
     """A directed cycle LONGER than any fixed superstep cap is one SCC.
     r12 regression pin: the inner coloring/reachability fixpoints used a
@@ -75,6 +88,7 @@ def test_scc_long_cycle_is_one_component(spark):
     assert set(out.values()) == {0}  # one SCC, labeled by its min id
 
 
+@pytest.mark.usefixtures("coloring_peel")
 def test_scc_singleton_chain_dual_peel(spark):
     """An ascending-id chain of singleton SCCs: forward-only coloring
     peels ONE root per round (O(#SCCs) rounds = O(n²) supersteps total);
@@ -91,6 +105,7 @@ def test_scc_singleton_chain_dual_peel(spark):
     assert out == {i: i for i in range(n)}  # all singletons, own-id labels
 
 
+@pytest.mark.usefixtures("coloring_peel")
 def test_scc_descending_chain_single_round(spark):
     """The mirror shape: a DESCENDING-id chain makes every vertex a
     forward root at superstep 1, so the forward peel alone resolves it in
@@ -104,6 +119,7 @@ def test_scc_descending_chain_single_round(spark):
     assert out == {i: i for i in range(n)}
 
 
+@pytest.mark.usefixtures("coloring_peel")
 def test_scc_max_iter_exhaustion_raises(spark):
     """Exhausting the round budget RAISES instead of returning a silent
     partial assignment (the old behavior)."""
@@ -164,6 +180,91 @@ def _jobs_run_by(spark, group, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _scc_testbed(seed):
+    """38 vertices: a giant SCC on 0..19 (a cycle plus random chords),
+    one-way edges from it into a sparse random tail on 20..34 that holds
+    one 3-cycle, and 35..37 reached only from the giant, so a remainder
+    without the giant leaves them with no edges."""
+    import random
+
+    rng = random.Random(seed)
+    giant = [(i, (i + 1) % 20) for i in range(20)]
+    giant += [tuple(rng.sample(range(20), 2)) for _ in range(15)]
+    tail = [(20, 21), (21, 22), (22, 20)]
+    tail += [tuple(rng.sample(range(20, 35), 2)) for _ in range(12)]
+    bridges = [(rng.randrange(20), v) for v in rng.sample(range(20, 38), 8)]
+    bridges += [(rng.randrange(20), v) for v in (35, 36, 37)]
+    return sorted(set(giant + tail + bridges))
+
+
+@pytest.mark.parametrize("regime,bound", [
+    ("local", None), ("distributed", 0), ("mixed", 25),
+])
+def test_scc_matches_networkx(spark, monkeypatch, regime, bound):
+    """SCCs (labelled by min member id) equal networkx's on a seeded
+    testbed in each regime: Tarjan on the whole graph (default bound),
+    coloring peel only (bound 0), and a bound between the giant SCC and
+    the total, so round 1 peels the giant on Spark and Tarjan finishes
+    the tail, edgeless vertices included."""
+    import networkx as nx
+
+    from grafeo_spark.algorithms import components
+
+    edges = _scc_testbed(seed=3)
+    g = nx.DiGraph(edges)
+    want = {v: min(c) for c in nx.strongly_connected_components(g) for v in c}
+    assert max(map(len, nx.strongly_connected_components(g))) == 20
+    if bound is not None:
+        monkeypatch.setattr(components, "DRIVER_ALGO_MAX_NODES", bound)
+    finished = []
+    tarjan = components._tarjan_scc
+    monkeypatch.setattr(
+        components, "_tarjan_scc", lambda adj: finished.append(len(adj)) or tarjan(adj)
+    )
+    out = dict(rows(components.strongly_connected_components(edges_df(spark, edges))))
+    assert out == want
+    n = g.number_of_nodes()
+    if regime == "mixed":
+        assert len(finished) == 1 and 0 < finished[0] <= n - 20
+    else:
+        assert finished == {"local": [n], "distributed": []}[regime]
+
+
+def test_tarjan_scc_deep_chain_needs_no_recursion():
+    """The driver finish is iterative: a 5000-deep path of singletons
+    plus one closing cycle, far past Python's recursion limit."""
+    from grafeo_spark.algorithms.components import _tarjan_scc
+
+    n = 5000
+    adj = {i: [i + 1] for i in range(n - 1)}
+    adj[n - 1] = [n - 3]
+    out = _tarjan_scc(adj)
+    assert out == {i: (n - 3 if i >= n - 3 else i) for i in range(n)}
+
+
+def test_scc_small_graph_job_count(spark):
+    """The battery's 60-vertex ring-plus-star shape (one ring per nation,
+    one-way edges from the global-min hub to every other hub) fits the
+    driver from round 1: the init's checkpoint-plus-count job and the
+    collect, at most 4 jobs with the caller's collect (the coloring peel
+    ran 22)."""
+    from grafeo_spark.algorithms import strongly_connected_components
+
+    nations: dict[int, list[int]] = {}
+    for k in range(1, 61):
+        nations.setdefault(k * 7 % 25, []).append(k)
+    ring = [(m[i], m[(i + 1) % len(m)]) for m in nations.values() for i in range(len(m))]
+    hubs = sorted(min(m) for m in nations.values())
+    e = edges_df(spark, ring + [(hubs[0], h) for h in hubs[1:]])
+    out, jobs = _jobs_run_by(
+        spark, "scc-small-jobs", lambda: strongly_connected_components(e).collect()
+    )
+    assert {r.id: r.component for r in out} == {
+        k: min(m) for m in nations.values() for k in m
+    }
+    assert jobs <= 4, jobs
 
 
 def test_topological_sort_matches_networkx_generations(spark):
@@ -648,6 +749,19 @@ def test_k_core_exhaustion_raises(spark, n, short, enough):
     with pytest.raises(ValueError, match="max_iter"):
         k_core(e, 2) if short is None else k_core(e, 2, max_iter=short)
     assert rows(k_core(e, 2, max_iter=enough)) == []
+
+
+def test_k_core_init_is_one_job(spark):
+    """peel_degrees plans its init with AQE off, so one job sizes the
+    loop and materializes both lazy checkpoints: k=2 on a 6-edge path is
+    that job, 5 supersteps (4 peel rounds and the empty one) and the
+    caller's collect."""
+    from grafeo_spark.algorithms import k_core
+
+    e = edges_df(spark, [(i, i + 1) for i in range(6)])
+    out, jobs = _jobs_run_by(spark, "kcore-init-jobs", lambda: rows(k_core(e, 2)))
+    assert out == []
+    assert jobs <= 1 + 5 + 1, jobs
 
 
 def test_articulation_and_bridges(spark):
